@@ -5,8 +5,9 @@
     python -m ferramenta_etl_spark run-all
 
 ≙ the GUI's run-one button (E:321-363), "Executar Todos" (E:365-383)
-with the same sequential fail-fast queue (E:415-422), and the script's
-own headless __main__ (S:270-273). Missing config auto-creates the
+with the same fail-fast abort (E:415-422) — here the independent jobs
+run concurrently and a failure cancels the ones in flight — and the
+script's own headless __main__ (S:270-273). Missing config auto-creates the
 example 5-job registry (≙ E:68-81). Exit code 0 on success, 1 on a
 failed pipeline — the GUI's ✅/❌ status surface becomes per-job status
 lines on stdout.

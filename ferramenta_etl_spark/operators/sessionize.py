@@ -86,28 +86,34 @@ def _cap_jump_targets(ms, seg_starts, seg_ends, seg_of_row, cap_ms):
     own disjoint int64 lane (segment_index * stride) so ONE global
     searchsorted serves every segment. The lane product can silently
     wrap int64 when (many segments) x (wide time span) — ADVICE r13 —
-    so when n_seg * stride would overflow, fall back to one
-    searchsorted per segment: same answers, Python-loop-per-segment
-    cost, only on inputs whose span x segment-count is astronomically
-    past any real workload (the guard preserves correctness, not
-    speed, there)."""
+    so the span and stride are sized in Python ints (an int64 stride
+    could itself wrap negative and pass the check), and when the stride
+    or n_seg * stride would overflow, fall back to one searchsorted per
+    segment: same answers, Python-loop-per-segment cost, only on inputs
+    whose span x segment-count is astronomically past any real workload
+    (the guard preserves correctness, not speed, there)."""
     import numpy as np
 
     n_seg = len(seg_starts)
     if n_seg == 0:
         return np.empty(0, dtype=np.int64)
-    stride = np.int64(int(ms.max()) - int(ms.min())) + cap_ms + 1
-    lim = np.iinfo(np.int64).max
-    # need max(adj) + cap_ms = (n_seg-1)*stride + span + cap_ms < lim;
+    cap = int(cap_ms)
+    stride = int(ms.max()) - int(ms.min()) + cap + 1
+    # need max(adj) + cap_ms = (n_seg-1)*stride + span + cap_ms < 2**63;
     # n_seg * stride bounds that sum with margin (stride > span + cap_ms)
-    if int(n_seg) * int(stride) < lim:
+    if stride < 2**63 and n_seg * stride < 2**63:
         seg_len = seg_ends - seg_starts
-        adj = (ms - np.repeat(ms[seg_starts], seg_len)) + seg_of_row * stride
-        return np.searchsorted(adj, adj + cap_ms, side="right")
+        adj = (ms - np.repeat(ms[seg_starts], seg_len)) + seg_of_row * np.int64(stride)
+        return np.searchsorted(adj, adj + cap, side="right")
+    # ms + cap_ms would wrap past int64 max: an event that close to the
+    # top has nothing strictly above it, so clamping the target to the
+    # max gives the same answer (the segment's end)
+    top = np.iinfo(np.int64).max - cap
     nxt = np.empty(len(ms), dtype=np.int64)
     for i in range(n_seg):
         s, e = seg_starts[i], seg_ends[i]
-        nxt[s:e] = s + np.searchsorted(ms[s:e], ms[s:e] + cap_ms, side="right")
+        seg = ms[s:e]
+        nxt[s:e] = s + np.searchsorted(seg, np.minimum(seg, top) + cap, side="right")
     return nxt
 
 

@@ -4,23 +4,30 @@
 Reference behaviors reproduced (SURVEY.md §2.3):
 - #6  JSON job registry {name: {label, tooltip}} (E:14, E:42-81)
 - #25 run-one job with wall-clock timing + log capture (E:321-363)
-- #26 run-all: sequential queue in registry order (E:365-383)
-- #27 fail-fast abort: a failure clears the remaining queue (E:415-422)
+- #26 run-all in registry order (E:365-383); here the jobs run
+      concurrently, one thread per job, and results come back in
+      registry order — the reference's scripts never wait on one
+      another, and run-all jobs must likewise be independent
+- #27 fail-fast abort: a failure stops the run (E:415-422) — jobs not
+      yet started stay pending, in-flight jobs are cancelled
 - #29 cancellation via Spark job groups (≙ process terminate, E:438-451)
 - #31 structured logging + per-stage timers (S:8-9, S:152, S:190-199)
 - #32 per-job status surface (⌛/✅/❌, E:288-292)
 
 Differences by design: jobs are in-process callables on ONE SparkSession
-(no child interpreter per job, E:363 — Spark parallelism replaces process
-isolation), and failures raise structured results instead of exit codes.
+(no child interpreter per job, E:363 — Spark parallelism and one thread
+per job replace process isolation), and failures raise structured results
+instead of exit codes.
 """
 
 from __future__ import annotations
 
 import json
 import logging
+import threading
 import time
 from collections.abc import Callable
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
@@ -28,6 +35,9 @@ from pyspark.sql import SparkSession
 log = logging.getLogger(__name__)
 
 STATUS_PENDING, STATUS_RUNNING, STATUS_OK, STATUS_FAIL = "pending", "running", "ok", "failed"
+
+# How often a fail-fast run re-cancels the job groups still in flight.
+CANCEL_POLL_S = 0.2
 
 
 @dataclass
@@ -114,24 +124,61 @@ class JobRegistry:
         fail_fast: bool = True,
         runner: Callable[[SparkSession, str], JobResult] | None = None,
     ) -> list[JobResult]:
-        """Sequential pipeline over the registry order (≙ E:365-383).
-        With ``fail_fast`` (the reference's behavior, E:415-422), a
-        failure clears the queue and raises PipelineError carrying the
-        partial results. ``runner`` lets callers wrap run_one (e.g. the
-        CLI's progress reporter) without re-implementing the queue."""
+        """Run every registered job concurrently, one thread per job, on
+        the shared session (≙ E:365-383, whose scripts never wait on one
+        another); results come back in registry order. Registered jobs
+        must be independent, as the shipped five are. Each thread calls
+        ``runner`` (default :meth:`run_one`, whose job group is
+        per-thread under PySpark's pinned-thread mode); it lets callers
+        wrap run_one (e.g. the CLI's progress reporter).
+
+        With ``fail_fast`` (the reference's behavior, E:415-422), the
+        first failure stops the run: jobs not yet started are reported
+        ``pending``, and the job groups still in flight are cancelled
+        again every ``CANCEL_POLL_S`` until their callables return
+        (cancelJobGroup only hits actions already submitted, and a job
+        submits several in turn); then PipelineError carries the first
+        failure and the results."""
         run = runner or self.run_one
-        results: list[JobResult] = []
-        queue = list(self.jobs)  # snapshot, ≙ E:371
-        while queue:
-            name = queue.pop(0)
-            res = run(spark, name)
-            results.append(res)
-            if res.status == STATUS_FAIL and fail_fast:
-                skipped = [JobResult(n, STATUS_PENDING) for n in queue]
-                results.extend(skipped)
-                queue.clear()  # ≙ E:419
-                raise PipelineError(res, results)
-        return results
+        names = list(self.jobs)  # snapshot, ≙ E:371
+        if not names:
+            return []
+        stop = threading.Event()
+
+        def start(name: str) -> JobResult:
+            if stop.is_set():
+                return JobResult(name, STATUS_PENDING)  # ≙ E:419, never started
+            return run(spark, name)
+
+        results: dict[str, JobResult] = {}
+        failure: JobResult | None = None
+        with ThreadPoolExecutor(len(names), thread_name_prefix="run-all") as pool:
+            running = {pool.submit(start, name): name for name in names}
+            try:
+                while running:
+                    done, _ = wait(
+                        running,
+                        timeout=CANCEL_POLL_S if stop.is_set() else None,
+                        return_when=FIRST_COMPLETED,
+                    )
+                    for fut in done:
+                        res = results[running.pop(fut)] = fut.result()
+                        if res.status == STATUS_FAIL and fail_fast and failure is None:
+                            failure = res
+                            stop.set()
+                    if stop.is_set():
+                        for name in running.values():
+                            self.cancel(spark, name)
+            finally:
+                # a runner that raised, or an interrupt, leaves jobs in
+                # flight: start nothing more, cancel them before the join
+                stop.set()
+                for name in running.values():
+                    self.cancel(spark, name)
+        ordered = [results[name] for name in names]
+        if failure is not None:
+            raise PipelineError(failure, ordered)
+        return ordered
 
     def cancel(self, spark: SparkSession, name: str) -> None:
         """Cancel a running job by its job group (≙ E:438-451).

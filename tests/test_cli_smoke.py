@@ -37,6 +37,20 @@ def test_cli_run_all(cli_tmp):
     assert _run("run-all", "--sink-dir", str(cli_tmp / "s")) == 0
 
 
+def test_cli_run_all_fails_on_missing_tables(cli_tmp, capsys):
+    """run-all over a source directory with no tables exits 1, and the
+    status line marks the failed job ❌ (the concurrent run still reports
+    through the CLI's progress runner)."""
+    empty = cli_tmp / "no_tables"
+    empty.mkdir()
+    argv = ["run-all", "--sink-dir", str(cli_tmp / "s"),
+            "--sf-dir", str(empty), "--cpus", "4"]
+    assert main(argv, _stop_session=False) == 1
+    status = capsys.readouterr().out.strip().splitlines()[-1]
+    assert "❌" in status
+    assert "✅" not in status
+
+
 def test_cli_curate_batch_and_stream(cli_tmp):
     assert (
         _run("curate", "--sink-dir", str(cli_tmp / "s"),

@@ -434,6 +434,38 @@ def test_cap_jump_targets_overflow_fallback_matches_fast_path():
         assert seg_big[i] == want, i
 
 
+def test_cap_jump_targets_near_int64_extremes_match_per_segment_scan():
+    """ADVICE r14: a stride computed in int64 (span + cap + 1) wraps
+    negative once the span nears 2**63 and slipped past the overflow
+    guard into the lane rebase; a span past 2**63 did not even fit the
+    int64 conversion. Both must take the per-segment fallback, and an
+    event within cap of int64 max must not wrap its own jump target."""
+    import numpy as np
+
+    from ferramenta_etl_spark.operators.sessionize import _cap_jump_targets
+
+    lo, hi = int(np.iinfo(np.int64).min), int(np.iinfo(np.int64).max)
+    cap = 1000
+    cases = {
+        # span fits int64, span + cap + 1 does not
+        "top": [[0, 400, 1200, 1300], [hi - 2500, hi - 1200, hi - 900, hi - 5]],
+        # span ~2**64: both extremes
+        "both": [[lo, lo + 999, lo + 1001], [-5, 10], [hi - 1000, hi]],
+    }
+    for label, segs in cases.items():
+        ms = np.array([v for seg in segs for v in seg], dtype=np.int64)
+        seg_lens = np.array([len(seg) for seg in segs])
+        seg_ends = np.cumsum(seg_lens).astype(np.int64)
+        seg_starts = seg_ends - seg_lens
+        seg_of_row = np.repeat(np.arange(len(segs)), seg_lens)
+        got = _cap_jump_targets(ms, seg_starts, seg_ends, seg_of_row, np.int64(cap))
+        want = []
+        for i in range(len(ms)):
+            s, e = int(seg_starts[seg_of_row[i]]), int(seg_ends[seg_of_row[i]])
+            want.append(next((j for j in range(i, e) if int(ms[j]) > int(ms[i]) + cap), e))
+        assert got.tolist() == want, label
+
+
 def test_capped_sessions_null_tiebreak_does_not_crash(spark):
     """ADVICE r13: np.lexsort over a raw object-dtype tiebreak column
     raises TypeError when it holds None/mixed types; the pandas
