@@ -123,6 +123,7 @@ from .text import (  # noqa: F401
     quality_score,
     normalize_url,
     redact_pii,
+    score_documents,
     tfidf_keywords,
     token_vocab,
     winnowing_fingerprints,

@@ -1,10 +1,16 @@
 """Text-analysis operators for training-data pipelines.
 
 Language ID (marker-token heuristic), quality scoring, token counting,
-and content fingerprinting — all pure SQL expressions (regexp/array
-functions), so they run inside whole-stage codegen at full scan speed;
-no Python in the hot path. Each has an exact DuckDB-oracle counterpart
-in plans/extensions.py.
+and content fingerprinting — all Spark SQL expressions (regexp, string
+and array functions), so there is no Python in the hot path. They do
+not all run inside whole-stage codegen, though: the higher-order
+functions (``filter``, ``transform``, ``aggregate``, ``zip_with``) fall
+back to interpreted evaluation, one lambda call per array element, and
+common-subexpression elimination does not merge two separately built
+lambdas. Every extra pass over a document's tokens is therefore a full
+interpreted pass, which is why the curation scorer (``score_documents``)
+reads all its token features from one fold. Each operator has an exact
+DuckDB-oracle counterpart in plans/extensions.py.
 """
 
 from __future__ import annotations
@@ -38,21 +44,43 @@ def ws_tokens(text: Column) -> Column:
     return F.split(F.lower(text), " ")
 
 
-def marker_score(text: Column, markers: tuple[str, ...]) -> Column:
-    """How many tokens of ``text`` are in the marker set (with
-    multiplicity)."""
-    return F.size(F.filter(ws_tokens(text), lambda t: t.isin(*markers)))
+def _count_fold(text: Column, token_sets: dict[str, tuple[str, ...]], finish) -> Column:
+    """One ``aggregate`` pass over ``text``'s whitespace tokens that
+    counts, per named token set, the tokens in that set (with
+    multiplicity; a token may count toward several sets) and, as
+    ``__n``, all tokens, then applies ``finish`` to the struct of
+    counts. Higher-order lambdas run interpreted, one call per token, so
+    every feature read from this one fold saves a full pass over the
+    tokens. NULL text gives NULL."""
+    zero = F.struct(*[F.lit(0).alias(k) for k in [*token_sets, "__n"]])
+
+    def step(acc: Column, t: Column) -> Column:
+        return F.struct(
+            *[
+                (acc[k] + t.isin(*toks).cast("int")).alias(k)
+                for k, toks in token_sets.items()
+            ],
+            (acc["__n"] + 1).alias("__n"),
+        )
+
+    return F.aggregate(ws_tokens(text), zero, step, finish)
+
+
+def _argmax_lang(counts: Column) -> Column:
+    """The language with the most marker tokens in a struct of
+    per-language counts, alphabetical-first on ties."""
+    best = F.greatest(*[counts[lang] for lang in LANGS])
+    expr = F.lit(None).cast("string")
+    for lang in reversed(LANGS):
+        expr = F.when(counts[lang] == best, F.lit(lang)).otherwise(expr)
+    return expr
 
 
 def lang_id(text: Column) -> Column:
-    """Predicted language = argmax of marker scores, alphabetical-first
-    tiebreak — deterministic by construction."""
-    scores = {lang: marker_score(text, m) for lang, m in LANG_MARKERS.items()}
-    best = F.greatest(*scores.values())
-    expr = F.lit(None).cast("string")
-    for lang in reversed(LANGS):
-        expr = F.when(scores[lang] == best, F.lit(lang)).otherwise(expr)
-    return expr
+    """Predicted language = argmax of marker-token counts,
+    alphabetical-first tiebreak — deterministic by construction. One
+    token pass counts every language at once."""
+    return _count_fold(text, LANG_MARKERS, _argmax_lang)
 
 
 def n_tokens(text: Column) -> Column:
@@ -93,9 +121,12 @@ def punct_ratio(text: Column) -> Column:
     )
 
 
+def _n_stopwords(text: Column) -> Column:
+    return F.size(F.filter(ws_tokens(text), lambda t: t.isin(*STOPWORDS)))
+
+
 def stopword_ratio(text: Column) -> Column:
-    stops = F.size(F.filter(ws_tokens(text), lambda t: t.isin(*STOPWORDS)))
-    return stops.cast("double") / n_tokens(text).cast("double")
+    return _n_stopwords(text).cast("double") / n_tokens(text).cast("double")
 
 
 def avg_token_len(text: Column) -> Column:
@@ -108,12 +139,71 @@ def quality_score(text: Column) -> Column:
     density, penalizes digit/punctuation noise, rewards length up to 100
     tokens. Expression order fixed so both engines compute bit-identical
     doubles."""
-    length_factor = F.least(n_tokens(text).cast("double") / 100.0, F.lit(1.0))
+    return _quality(text, _n_stopwords(text), n_tokens(text))
+
+
+def _quality(text: Column, stops: Column, n: Column) -> Column:
+    """quality_score from ``text``'s stopword and token counts."""
+    length_factor = F.least(n.cast("double") / 100.0, F.lit(1.0))
     return (
-        stopword_ratio(text) * 0.3
+        stops.cast("double") / n.cast("double") * 0.3
         + (1.0 - digit_ratio(text)) * 0.3
         + (1.0 - punct_ratio(text)) * 0.2
         + length_factor * 0.2
+    )
+
+
+def document_scores(text: Column) -> Column:
+    """struct(lang, quality, n_tok): lang_id, quality_score and n_tokens
+    of ``text``, bit-identical to the three separate calls, from one
+    token pass — one fold counts the language markers, the stopwords and
+    the tokens together, and its finish lambda reads all three features
+    off the counts. NULL text gives NULL."""
+
+    def finish(c: Column) -> Column:
+        return F.struct(
+            _argmax_lang(c).alias("lang"),
+            _quality(text, c["__stops"], c["__n"]).alias("quality"),
+            c["__n"].alias("n_tok"),
+        )
+
+    return _count_fold(text, {**LANG_MARKERS, "__stops": STOPWORDS}, finish)
+
+
+def score_documents(
+    docs: "DataFrame",
+    min_quality: float = 0.5,
+    min_tokens: int = 5,
+) -> "DataFrame":
+    """``docs`` with ``lang``, ``quality`` (rounded to 6 places) and
+    ``n_tok`` from :func:`document_scores` as its last columns,
+    replacing any input columns of those names, keeping only the
+    documents with a language, ``quality >= min_quality`` and
+    ``n_tok >= min_tokens`` — the curation scorer, shared by the batch
+    and streaming pipelines so the two agree row for row.
+
+    The floor is applied by a generator over the scored row rather than
+    a ``filter``: the optimizer pushes a filter below the projection it
+    reads, substituting the scoring expression into the predicate, so
+    every document would be scored twice, the first time below any
+    repartition the caller made (on one core for a single-row-group
+    scan). A generator's output cannot be substituted, so each document
+    is scored once, where the caller put the scorer."""
+    s = F.col("__s")
+    row = F.struct(
+        s["lang"].alias("lang"),
+        F.round(s["quality"], 6).alias("quality"),
+        s["n_tok"].alias("n_tok"),
+    )
+    keep = F.filter(
+        F.array(row),
+        lambda r: r["lang"].isNotNull()
+        & (r["quality"] >= min_quality)
+        & (r["n_tok"] >= min_tokens),
+    )
+    kept = [c for c in docs.columns if c not in ("lang", "quality", "n_tok")]
+    return docs.withColumn("__s", document_scores(F.col("text"))).select(
+        *kept, F.inline(keep)
     )
 
 
@@ -1098,7 +1188,9 @@ def tfidf_keywords(
     ranks at full precision."""
     if k < 1:
         raise ValueError(f"k must be >= 1 (got {k})")
-    kw = tfidf_topk_arrays(docs, k, text_col, doc_id_col, min_df, stable_round)
+    kw = tfidf_topk_arrays(
+        docs, k, text_col, min_df=min_df, stable_round=stable_round
+    )
     return kw.select(
         F.col(doc_id_col).alias("doc_id"),
         F.posexplode("__kw").alias("__p", "__s"),
@@ -1122,20 +1214,19 @@ one extra vocabulary-count pass at plan build, outside timed runs (it
 cannot share the consumer's scan without persisting the vocabulary
 relation, which would move the df aggregation out of the timed region
 of the oracle-gated consumer — the caching the bench contract forbids).
-The JOIN fallback re-attaches keywords by doc id and therefore requires
-UNIQUE doc ids (null-safe; see the in-function contract note)."""
+The JOIN fallback re-attaches keywords by a digest of the text, so doc
+ids need not be unique on either path."""
 
 
 def tfidf_topk_arrays(
     docs: "DataFrame",
     k: int = 5,
     text_col: str = "text",
-    doc_id_col: str = "doc_id",
     min_df: int = 2,
     stable_round: int | None = None,
     max_inline_vocab: int | None = _MAX_INLINE_VOCAB,
 ) -> "DataFrame":
-    """(doc_id, __kw) — each doc's top-``k`` TF-IDF keywords as ONE
+    """``docs`` plus ``__kw`` — each doc's top-``k`` TF-IDF keywords as ONE
     rank-ordered array<struct<tfidf, term>> column (empty array when no
     term survives ``min_df``). The array kernel behind
     :func:`tfidf_keywords`, exposed so compositions that want the
@@ -1272,22 +1363,22 @@ def tfidf_topk_arrays(
     # ATTACH goes relational: explode the (doc, distinct-term) pairs —
     # far smaller than the token stream — join the vocabulary-sized idf
     # relation on term, and re-collect per doc with the SAME
-    # (-tfidf, term) sort key and slice. CONTRACT (review r14): this
-    # path re-attaches __kw by doc id, so ids must be UNIQUE — rows
-    # sharing an id would receive a merged top-k (the inline path has
-    # no such requirement, one more reason it is the default). NULL ids
-    # are fine: the join-back is null-safe, and a null-id doc keeps its
-    # own keywords (there can be at most one such doc under the
-    # uniqueness contract).
+    # (-tfidf, term) sort key and slice. A row's keywords are a function
+    # of its text alone, so they travel keyed by a digest of the text,
+    # not by doc id: rows sharing an id keep their own keywords, as on
+    # the inline path, and rows sharing a text share theirs (their
+    # identical pairs collapse in the collect_set). A NULL text has no
+    # pairs and keeps an empty array.
     idf_rel = df_rel.select("term", _idf_expr(n_docs).alias("idf"))
+    key = F.sha2(F.col(text_col), 256)
     pairs = (
-        docs.select(F.col(doc_id_col).alias("__tt_id"), toks.alias("__tt_toks"))
+        docs.select(key.alias("__tt_key"), toks.alias("__tt_toks"))
         .withColumn("__tt_st", F.array_sort(F.col("__tt_toks")))
         .withColumn("__tt_ends", ends)
         .withColumn("__tt_pairs", tf_pairs)
-        .select("__tt_id", F.explode("__tt_pairs").alias("__p"))
+        .select("__tt_key", F.explode("__tt_pairs").alias("__p"))
         .select(
-            "__tt_id",
+            "__tt_key",
             F.col("__p.term").alias("term"),
             F.col("__p.tf").alias("tf"),
         )
@@ -1299,24 +1390,23 @@ def tfidf_topk_arrays(
         else raw_score
     )
     scored_rel = pairs.join(idf_rel, "term").select(
-        "__tt_id",
+        "__tt_key",
         F.struct(
             (-score).alias("__neg"),
             F.col("term").alias("term"),
             score.alias("tfidf"),
         ).alias("__s"),
     )
-    kw_rel = scored_rel.groupBy("__tt_id").agg(
+    kw_rel = scored_rel.groupBy("__tt_key").agg(
         F.transform(
-            F.slice(F.array_sort(F.collect_list("__s")), 1, k),
+            F.slice(F.array_sort(F.collect_set("__s")), 1, k),
             lambda s: F.struct(s["tfidf"].alias("tfidf"), s["term"].alias("term")),
         ).alias("__kw")
     )
     empty_kw = F.array().cast("array<struct<tfidf:double,term:string>>")
     return (
-        docs.join(
-            kw_rel, docs[doc_id_col].eqNullSafe(kw_rel["__tt_id"]), "left"
-        )
-        .drop("__tt_id")
+        docs.withColumn("__tt_key", key)
+        .join(kw_rel, "__tt_key", "left")
+        .drop("__tt_key")
         .withColumn("__kw", F.coalesce(F.col("__kw"), empty_kw))
     )

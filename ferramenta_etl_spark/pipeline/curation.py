@@ -2,8 +2,10 @@
 into one idempotent job — what this engine exists to run at 100 TB.
 
     documents
-      -> language filter (drop unidentified)
-      -> quality floor (text.quality_score)
+      -> scan-parallelism guard (a single-file scan is hash-spread over
+         the session's cores before the per-token scoring work)
+      -> one-pass scoring + language/quality/token floor
+         (text.score_documents)
       -> exact dedup (md5 hash-groupBy, min-id survivor)
       -> near-dup collapse (MinHash-LSH pairs -> connected components
          -> canonical survivor per cluster)
@@ -31,13 +33,12 @@ from ..operators.sampling import (
 )
 from ..operators.text import (
     clean_document_lines,
-    lang_id,
-    n_tokens,
     quality_score,
     redact_pii,
+    score_documents,
 )
 from ..sinks import write_ignore_conflicts
-from ..sources import load_table
+from ..sources import ensure_scan_parallelism, load_table
 
 
 def curate_documents(
@@ -163,7 +164,12 @@ def curated_frame(
     mix_alpha: float = 0.5,
     decontaminate_spans: bool = False,
 ) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
+    # scoring is interpreted per-token work: spread a single-row-group
+    # scan over the session's cores before it (a no-op on multi-file
+    # inputs)
+    docs = ensure_scan_parallelism(
+        load_table(spark, sf_dir, "documents"), spread_by=("doc_id",)
+    )
     if sample_rate is not None:
         # deterministic hash sample at INGEST — the cheapest point (a
         # narrow filter the scan absorbs), and reruns draw the identical
@@ -174,20 +180,7 @@ def curated_frame(
         # differing only in nav/cookie boilerplate become exact dups,
         # and quality scores measure the content, not the chrome
         docs = clean_document_lines(docs)
-    scored = docs.select(
-        "doc_id",
-        "text",
-        "source",
-        "n_chars",
-        lang_id(F.col("text")).alias("lang"),
-        F.round(quality_score(F.col("text")), 6).alias("quality"),
-        n_tokens(F.col("text")).alias("n_tok"),
-    )
-    good = scored.filter(
-        F.col("lang").isNotNull()
-        & (F.col("quality") >= min_quality)
-        & (F.col("n_tok") >= min_tokens)
-    )
+    good = score_documents(docs, min_quality, min_tokens)
     # exact_unique feeds TWO consumers: the MinHash pair generation (which
     # materializes under connected_components' edge checkpoint) and the
     # final survivor anti-join. Without a persist the scan + regex-heavy

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.sampling import hash_sample
-from ..operators.text import lang_id, n_tokens, quality_score
+from ..operators.text import score_documents
 from .windows import stage_single_file, stream_ddl, stream_ignore_conflicts
 
 
@@ -50,22 +50,10 @@ def curation_stream(
 ) -> DataFrame:
     """The stateless curation stages as one streaming projection:
     score -> quality/lang/token floor -> optional deterministic sample
-    -> content hash. Identical expressions to the batch pipeline
-    (pipeline/curation.py), so batch and stream agree row-for-row."""
-    scored = docs.select(
-        "doc_id",
-        "text",
-        "source",
-        "n_chars",
-        lang_id(F.col("text")).alias("lang"),
-        F.round(quality_score(F.col("text")), 6).alias("quality"),
-        n_tokens(F.col("text")).alias("n_tok"),
-    )
-    good = scored.filter(
-        F.col("lang").isNotNull()
-        & (F.col("quality") >= min_quality)
-        & (F.col("n_tok") >= min_tokens)
-    )
+    -> content hash. The scorer is operators/text.score_documents, the
+    batch pipeline's own (pipeline/curation.py), so batch and stream
+    agree row-for-row."""
+    good = score_documents(docs, min_quality, min_tokens)
     if sample_rate is not None:
         good = hash_sample(good, sample_rate)
     return good.withColumn("text_hash", F.md5(F.col("text")))

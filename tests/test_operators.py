@@ -1592,6 +1592,42 @@ def test_tfidf_join_fallback_matches_inline(spark, sf_dir):
     assert ni == nf and ni[None]
 
 
+def test_tfidf_join_fallback_keeps_each_rows_keywords_under_shared_ids(spark):
+    """Rows sharing a doc id keep their own keywords on the relational
+    fallback (max_inline_vocab=0), exactly as on the inline path: the
+    fallback re-attaches keywords by the text, not by the id, so two
+    different texts under one id do not get a merged top-k, and two rows
+    with the same text do not get each term twice."""
+    from ferramenta_etl_spark.operators.text import tfidf_topk_arrays
+
+    docs = spark.createDataFrame(
+        [
+            (1, "apple apple banana"),
+            (1, "cherry cherry cherry date"),
+            (1, "cherry cherry cherry date"),
+            (2, "banana date apple"),
+            (2, "apple cherry"),
+            (None, "date date banana"),
+            (3, None),
+        ],
+        "doc_id int, text string",
+    )
+
+    def keywords(df):
+        return sorted(
+            (r.doc_id or -1, r.text or "", tuple((s.term, s.tfidf) for s in r["__kw"]))
+            for r in df.collect()
+        )
+
+    inline = keywords(tfidf_topk_arrays(docs, k=2, min_df=1))
+    fallback = keywords(tfidf_topk_arrays(docs, k=2, min_df=1, max_inline_vocab=0))
+    assert fallback == inline
+    by_text = {text: kw for _, text, kw in inline}
+    assert [t for t, _ in by_text["apple apple banana"]] == ["apple", "banana"]
+    assert [t for t, _ in by_text["cherry cherry cherry date"]] == ["cherry", "date"]
+    assert by_text[""] == ()
+
+
 def test_contamination_bloom_path_equals_hashed_join(spark, sf_dir):
     """contamination_hits_scaled (round 12: bloom pre-screen + exact
     left-semi verify, for benchmark sets past broadcast size) returns

@@ -183,7 +183,7 @@ def test_streaming_curation_matches_batch_and_is_idempotent(spark, sf_dir, tmp_p
     hash-keyed sink is the dedup state, so idempotency holds against
     everything already loaded."""
     from ferramenta_etl_spark.operators.dedup import dedup_exact
-    from ferramenta_etl_spark.operators.text import lang_id, n_tokens, quality_score
+    from ferramenta_etl_spark.operators.text import score_documents
     from ferramenta_etl_spark.sources import load_table
     from ferramenta_etl_spark.streaming.curation import run_curation_stream
 
@@ -191,16 +191,7 @@ def test_streaming_curation_matches_batch_and_is_idempotent(spark, sf_dir, tmp_p
     n = run_curation_stream(spark, sf_dir, sink, str(tmp_path / "ckpt1"))
     assert n > 0
 
-    docs = load_table(spark, sf_dir, "documents")
-    scored = docs.select(
-        "doc_id", "text",
-        lang_id(F.col("text")).alias("lang"),
-        F.round(quality_score(F.col("text")), 6).alias("quality"),
-        n_tokens(F.col("text")).alias("n_tok"),
-    )
-    good = scored.filter(
-        F.col("lang").isNotNull() & (F.col("quality") >= 0.5) & (F.col("n_tok") >= 5)
-    )
+    good = score_documents(load_table(spark, sf_dir, "documents"))
     batch_hashes = {
         r.h for r in dedup_exact(good).select(F.md5("text").alias("h")).collect()
     }
