@@ -876,12 +876,8 @@ def append_to_ivfpq_index(
         )
         bucketed = assign_ivf_buckets(fresh, cents, id_col, vec_col)
         encoded = _ivfpq_encode(bucketed, cents, cbs, id_col, vec_col)
-        # encoded is id-deduped, which implies composite-key-deduped —
-        # the deterministic in-batch dedup write_ignore_conflicts would
-        # re-derive is already satisfied
         return _write_parquet_locked(
             spark,
-            encoded,
             encoded,
             path,
             keys=["centroid_id", id_col],

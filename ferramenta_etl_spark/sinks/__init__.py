@@ -1,7 +1,6 @@
 from .idempotent import (  # noqa: F401
     SinkLockTimeout,
     ensure_table,
-    merge_insert_condition,
     write_ignore_conflicts,
 )
 from .jdbc_conflict import (  # noqa: F401

@@ -12,9 +12,16 @@ did the conflict check server-side; Spark has no such sink primitive
 Scale notes:
 - only the KEY COLUMNS of the existing table are scanned (column-pruned
   parquet read), not whole rows;
-- the incoming side is deduped on the keys first (latest_per_key with a
-  deterministic tiebreak) because ON CONFLICT also collapses in-batch
-  duplicates;
+- the anti-join runs FIRST, over the undeduped batch, and the in-batch
+  dedup (``latest_per_key`` with a deterministic tiebreak, because ON
+  CONFLICT also collapses in-batch duplicates) runs on its survivors.
+  On a scheduled re-run most offered keys are already held, so the
+  dedup's exchange and its sorts over every column see only the few
+  rows that will be appended. The order is exact: the anti-join's
+  predicate reads only the key columns, so it keeps or drops a whole
+  key group at once, and the per-key pick commutes with it. NULL key
+  parts included — the window's ``partitionBy`` groups NULLs together
+  and the anti-join compares with ``<=>``;
 - the anti-join is a plain equi-join: broadcastable when the sink is
   small, AQE-skew-handled when it is not.
 
@@ -25,17 +32,11 @@ itself — two jobs could both pass the anti-join and append the same key
 with atomic exclusive create (local, HDFS); on plain S3 the lock is
 best-effort and the single-writer assertion stands (the reference had
 the same at-most-once guarantee only per-process). For true ACID upsert
-under concurrent writers there are two table-format MERGE backends
-behind the SAME call signature (≙ ON CONFLICT's server-side conflict
-check, S:214-218): ``txlog`` — the self-contained transaction-log
-format in :mod:`.txlog`, lock-free optimistic concurrency with atomic
-version publish, fully executed in CI including a concurrent-append
-race test — and ``delta`` (Delta Lake MERGE), selected automatically
-when the target is a Delta table and delta-spark is importable (it is
-NOT installable in this container, so the Delta branch is
-available-but-unproven: covered by the pure condition-builder unit
-tests plus an integration test that skips without the package; the
-txlog backend carries the executed ACID guarantee here).
+under concurrent writers the ``txlog`` backend sits behind the SAME
+call signature (≙ ON CONFLICT's server-side conflict check, S:214-218):
+the self-contained transaction-log format in :mod:`.txlog`, lock-free
+optimistic concurrency with atomic version publish, executed in CI
+including a concurrent-append race test.
 """
 
 from __future__ import annotations
@@ -53,15 +54,6 @@ from ..operators.dedup import latest_per_key
 from ..sources.tables import SchemaContractError
 
 log = logging.getLogger(__name__)
-
-
-def _delta_available() -> bool:
-    try:
-        import delta  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
 
 
 class SinkLockTimeout(RuntimeError):
@@ -95,7 +87,7 @@ def _sink_lock(
     the rename winner clears the orphan and re-races the create. On
     object stores WITHOUT atomic exclusive create (plain S3), this
     degrades to best-effort — the single-writer assertion stands there;
-    use the ``delta`` backend for true ACID upsert.
+    use the ``txlog`` backend for true ACID upsert.
 
     OWNERSHIP + HEARTBEAT (ADVICE r07): the winner stamps a unique token
     into the lock file and a daemon thread refreshes the lock mtime every
@@ -325,10 +317,10 @@ def ensure_table(
 
 def anti_join_keys(df: DataFrame, existing_keys: DataFrame, keys: Sequence[str]) -> DataFrame:
     """``df`` minus the rows whose key tuple already exists — NULL-SAFE
-    (``<=>``), matching :func:`merge_insert_condition` and the in-batch
-    dedup (whose partitionBy groups NULL keys together): a name-based
-    equi-join's plain ``=`` would never match a NULL key, so a NULL-keyed
-    row would re-append on every batch. EqualNullSafe is still an
+    (``<=>``), matching the in-batch dedup (whose partitionBy groups
+    NULL keys together): a name-based equi-join's plain ``=`` would
+    never match a NULL key, so a NULL-keyed row would re-append on every
+    batch. EqualNullSafe is still an
     equi-join predicate to Spark — hash/broadcast join strategies and AQE
     apply exactly as for ``=``."""
     import functools
@@ -340,100 +332,6 @@ def anti_join_keys(df: DataFrame, existing_keys: DataFrame, keys: Sequence[str])
         [df[k].eqNullSafe(F.col(f"__existing_{k}")) for k in keys],
     )
     return df.join(renamed, on=cond, how="left_anti")
-
-
-def merge_insert_condition(keys: Sequence[str], target: str = "t", source: str = "s") -> str:
-    """The MERGE ON condition for first-writer-wins insert: null-safe
-    equality over the key columns (``<=>`` matches ON CONFLICT's PK
-    semantics where NULL keys compare equal). Pure string builder so the
-    MERGE path is unit-testable without delta-spark installed."""
-    if not keys:
-        raise ValueError("merge requires at least one key column")
-    return " AND ".join(f"{target}.`{k}` <=> {source}.`{k}`" for k in keys)
-
-
-def _delta_usable(df: DataFrame, path: str) -> bool:
-    """backend='auto' may take the delta path ONLY when the target
-    either does not exist yet (delta will create it) or already IS a
-    Delta table. Selecting delta just because the package is importable
-    would crash on (or silently shadow) a sink previously written as
-    plain parquet — installing delta-spark must not break existing
-    parquet sinks."""
-    if not _delta_available():
-        return False
-    from delta.tables import DeltaTable
-
-    spark = df.sparkSession
-    if DeltaTable.isDeltaTable(spark, path):
-        return True
-    return not _exists(spark, path)
-
-
-def _write_merge_delta(
-    incoming: DataFrame,
-    path: str,
-    keys: Sequence[str],
-    partition_cols: Sequence[str] = (),
-) -> int:
-    """ACID upsert-ignore via Delta MERGE WHEN NOT MATCHED INSERT —
-    atomic under concurrent writers (the table format serializes
-    commits), unlike the parquet anti-join path. Creation honors
-    ``partition_cols``; the appended-row count comes from the MERGE
-    commit's own operationMetrics (exact and transaction-consistent —
-    before/after table counts would cost two full scans per batch and
-    mis-count under the very concurrency this backend exists for).
-
-    Finding the right history entry: under the concurrent writers this
-    backend exists for, another commit can land between ``execute()``
-    and the history read, so ``history(1)`` may describe a DIFFERENT
-    operation. Each merge therefore tags its commit with a unique
-    ``userMetadata`` value (the documented Delta mechanism for exactly
-    this) and reads back the entry matching the tag — a metadata-scale
-    scan of the commit log, never the data."""
-    import uuid
-
-    from delta.tables import DeltaTable
-
-    spark = incoming.sparkSession
-    if not DeltaTable.isDeltaTable(spark, path):
-        w = incoming.write.format("delta")
-        if partition_cols:
-            w = w.partitionBy(*partition_cols)
-        w.save(path)
-        return incoming.count()
-    target = DeltaTable.forPath(spark, path)
-    tag = f"ferramenta-merge-{uuid.uuid4().hex}"
-    meta_key = "spark.databricks.delta.commitInfo.userMetadata"
-    try:
-        prev = spark.conf.get(meta_key)
-    except Exception:
-        prev = None
-    spark.conf.set(meta_key, tag)
-    try:
-        (
-            target.alias("t")
-            .merge(incoming.alias("s"), merge_insert_condition(keys))
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset(meta_key)
-        else:
-            spark.conf.set(meta_key, prev)
-    # Bounded lookback (ADVICE r04): our commit is the most recent MERGE
-    # modulo whatever landed between execute() and here, so scan the last
-    # few entries first; the unbounded scan is only the fallback for a
-    # pathological commit storm, not the per-batch cost — history() over
-    # a long-lived high-frequency sink's full log grows without bound.
-    tag_match = (F.col("operation") == "MERGE") & (F.col("userMetadata") == tag)
-    row = (
-        target.history(20).filter(tag_match).select("operationMetrics").first()
-    )
-    if row is None:
-        row = target.history().filter(tag_match).select("operationMetrics").first()
-    metrics = (row[0] if row is not None else {}) or {}
-    return int(metrics.get("numTargetRowsInserted", 0))
 
 
 def _touched_partition_filter(incoming: DataFrame, partition_cols: Sequence[str]):
@@ -455,6 +353,31 @@ def _touched_partition_filter(incoming: DataFrame, partition_cols: Sequence[str]
     return clause
 
 
+def dedup_batch(
+    df: DataFrame, keys: Sequence[str], order_by: Sequence[str] = ()
+) -> DataFrame:
+    """One row per key tuple of ``df``: the first under ``order_by``
+    (ascending; the keys when empty), then the non-key columns.
+
+    The non-key tiebreak makes the order TOTAL: with the default
+    order_by=keys, every ordering column is constant inside a key
+    partition, so which of two same-key rows in one batch survived was
+    whatever the shuffle produced first — nondeterministic across
+    reruns/partitioning. (Maps are unorderable in Spark; no sink schema
+    here carries one — callers with map columns must pass an explicit
+    total order_by.)"""
+    non_key = [c for c in df.columns if c not in set(keys)]
+    return latest_per_key(
+        df,
+        keys=list(keys),
+        order_by=[F.col(c).asc() for c in order_by or keys],
+        tiebreak=non_key if non_key else list(keys),
+    )
+
+
+_BACKENDS = ("auto", "parquet", "txlog")
+
+
 def write_ignore_conflicts(
     df: DataFrame,
     path: str,
@@ -469,21 +392,17 @@ def write_ignore_conflicts(
 ) -> int:
     """Keyed first-writer-wins append (≙ ON CONFLICT DO NOTHING, S:214-218).
 
-    1. dedup the incoming batch on ``keys`` (deterministic: order_by then
-       keys as tiebreak);
-    2. anti-join against the EXISTING key set (key columns only) — or,
-       on the ``delta`` backend, a table-format MERGE that does the
-       conflict check transactionally;
-    3. append the survivors.
+    1. anti-join the batch against the EXISTING key set (key columns
+       only), skipped while the sink holds no data;
+    2. dedup the survivors on ``keys`` (:func:`dedup_batch` —
+       deterministic: order_by, then the non-key columns as tiebreak);
+    3. append them.
 
     ``backend``: ``parquet`` (anti-join + append, serialized under an
     advisory writer LOCK — see below), ``txlog`` (ACID MERGE on the
     self-contained transaction-log format, :mod:`.txlog` — lock-free
-    optimistic concurrency, the CI-proven ACID path in this
-    environment), ``delta`` (ACID MERGE; requires delta-spark, not
-    installable here — available-but-unproven), or ``auto`` (delta iff
-    the package is importable and the target is/will be a Delta table,
-    else parquet).
+    optimistic concurrency), or ``auto`` (= parquet). Any other name
+    raises ``ValueError``.
 
     Concurrency (parquet backend): the anti-join + append sequence runs
     under :func:`_sink_lock` — an atomic-create sibling lock file that
@@ -494,7 +413,7 @@ def write_ignore_conflicts(
     (:class:`SinkLockTimeout` on expiry); ``lock_stale_s`` is the age
     past which a crashed writer's orphaned lock is taken over. The lock
     is ADVISORY and relies on atomic exclusive create (local/HDFS); on
-    plain S3 it is best-effort only — use the delta backend there.
+    plain S3 it is best-effort only — use the txlog backend there.
 
     ``partition_cols`` lays the sink out hive-partitioned (the 100 TB
     posture: date-partitioned fact sinks) and, critically, PRUNES the
@@ -515,6 +434,10 @@ def write_ignore_conflicts(
     Returns the number of rows appended. Re-running with the same input
     appends 0.
     """
+    if backend not in _BACKENDS:
+        raise ValueError(
+            f"unknown sink backend {backend!r}; choose one of {', '.join(_BACKENDS)}"
+        )
     if rules is not None and bad_records_path is None:
         raise ValueError(
             "rules require bad_records_path — refusing to drop rows "
@@ -534,20 +457,6 @@ def write_ignore_conflicts(
             f"{list(keys)} — otherwise a conflict hiding in an untouched "
             "partition would escape the pruned anti-join"
         )
-    # In-batch key dedup needs a TOTAL order: with the default
-    # order_by=keys, every ordering column is constant inside a key
-    # partition, so which of two same-key rows in one batch survived was
-    # whatever the shuffle produced first — nondeterministic across
-    # reruns/partitioning. The non-key columns break the tie (maps are
-    # unorderable in Spark; no sink schema here carries one — callers
-    # with map columns must pass an explicit total order_by).
-    non_key = [c for c in df.columns if c not in set(keys)]
-    incoming = latest_per_key(
-        df,
-        keys=list(keys),
-        order_by=[F.col(c).asc() for c in order_by] if order_by else [F.col(k).asc() for k in keys],
-        tiebreak=non_key if non_key else list(keys),
-    )
     if backend == "txlog":
         if partition_cols:
             raise ValueError(
@@ -558,37 +467,29 @@ def write_ignore_conflicts(
             )
         from .txlog import write_merge_txlog
 
-        return write_merge_txlog(incoming, path, keys)
-    if backend == "delta" or (backend == "auto" and _delta_usable(df, path)):
-        if not _delta_available():
-            raise RuntimeError(
-                "backend='delta' requires the delta-spark package; "
-                "use backend='parquet' (single-writer) instead"
-            )
-        return _write_merge_delta(incoming, path, keys, partition_cols)
+        return write_merge_txlog(df, path, keys, order_by=order_by)
 
     with _sink_lock(spark, path, timeout_s=lock_timeout_s, stale_s=lock_stale_s):
-        return _write_parquet_locked(
-            spark, incoming, df, path, keys, partition_cols
-        )
+        return _write_parquet_locked(spark, df, path, keys, partition_cols, order_by)
 
 
 def _write_parquet_locked(
     spark: SparkSession,
-    incoming: DataFrame,
     df: DataFrame,
     path: str,
     keys: Sequence[str],
     partition_cols: Sequence[str],
+    order_by: Sequence[str] = (),
 ) -> int:
-    """The parquet anti-join + append body; caller holds the sink lock."""
+    """The parquet anti-join + dedup + append body; caller holds the
+    sink lock."""
     if ensure_table(spark, path, df, partition_cols) or not _has_data_files(
         spark, path
     ):
         # a partitioned bootstrap holds no data files (zero rows write
         # zero partition directories), so there is nothing to conflict
         # with — reading it would fail schema inference
-        fresh = incoming
+        fresh = df
     else:
         existing = spark.read.parquet(path)
         # a partitioned read reorders partition columns to the end of the
@@ -620,14 +521,16 @@ def _write_parquet_locked(
                 f"sink {path}: existing columns {existing.columns} != incoming {df.columns}"
             )
         if partition_cols:
-            existing = existing.filter(_touched_partition_filter(incoming, partition_cols))
+            # the undeduped batch touches the same partition tuples as
+            # its dedup: partition columns are key columns
+            existing = existing.filter(_touched_partition_filter(df, partition_cols))
         existing_keys = existing.select(*keys)
-        fresh = anti_join_keys(incoming, existing_keys, list(keys))
+        fresh = anti_join_keys(df, existing_keys, list(keys))
     # Materialize the survivors BEFORE appending: localCheckpoint cuts
     # the lineage back to the target parquet, so a task retry / cache
     # eviction during the append can never re-scan the path mid-write
     # and double-read its own output (plain .cache() could recompute).
-    fresh = fresh.localCheckpoint(eager=True)
+    fresh = dedup_batch(fresh, keys, order_by).localCheckpoint(eager=True)
     n = fresh.count()
     if n:
         w = fresh.write.mode("append")

@@ -5,10 +5,9 @@ de Importação de Dados.py:214-218``) — PostgreSQL serializes the
 conflict check server-side, so two concurrent loaders can never both
 insert the same key. The parquet anti-join backend
 (:mod:`.idempotent`) approximates that with an advisory writer lock;
-the Delta MERGE branch would do it transactionally but delta-spark is
-not installable in this environment, so this module provides the same
-guarantee with a self-contained transaction log — the standard
-log-structured table design (Delta/Iceberg papers, public protocol):
+this module provides the transactional guarantee with a self-contained
+transaction log — the standard log-structured table design
+(Delta/Iceberg papers, public protocol):
 
 ``<table>/_txlog/``
     ``00000000000000000001.json``  one JSON manifest per commit: the
@@ -68,6 +67,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import SchemaContractError
+from .idempotent import anti_join_keys, dedup_batch
 
 log = logging.getLogger(__name__)
 
@@ -404,15 +404,19 @@ def write_merge_txlog(
     incoming: DataFrame,
     path: str,
     keys: Sequence[str],
+    order_by: Sequence[str] = (),
     max_retries: int = 20,
 ) -> int:
     """ACID first-writer-wins keyed append (≙ ON CONFLICT DO NOTHING,
-    S:214-218) on the transaction-log table at ``path``. The caller
-    (``write_ignore_conflicts``) has already deduped ``incoming`` on
-    ``keys``. Returns the number of rows actually inserted; re-running
-    the same batch inserts 0. Safe under concurrent writers: commits
-    serialize through the atomic version publish, and a loser re-checks
-    its batch against exactly the files the winner added."""
+    S:214-218) on the transaction-log table at ``path``. ``incoming``
+    may hold in-batch duplicates: the key bounds and the conflict check
+    run over it as offered (the dedup keeps every key, so the bounds are
+    the same), and only the survivors are deduped on ``keys`` under
+    ``order_by`` (:func:`.idempotent.dedup_batch`). Returns the number
+    of rows actually inserted; re-running the same batch inserts 0. Safe
+    under concurrent writers: commits serialize through the atomic
+    version publish, and a loser re-checks its batch against exactly the
+    files the winner added."""
     spark = incoming.sparkSession
     keys = list(keys)
     snap = snapshot_txlog(spark, path)
@@ -430,13 +434,13 @@ def write_merge_txlog(
             .parquet(*_abs_files(path, live))
             .select(*keys)
         )
-        from .idempotent import anti_join_keys
-
         return anti_join_keys(df, existing_keys, keys)
 
     # Materialize survivors BEFORE writing: cuts lineage so the write
     # and any OCC re-check never re-scan the source mid-flight.
-    fresh = survivors_against(snap.files, incoming).localCheckpoint(eager=True)
+    fresh = dedup_batch(
+        survivors_against(snap.files, incoming), keys, order_by
+    ).localCheckpoint(eager=True)
     n = fresh.count()
     if n == 0:
         return 0

@@ -1,5 +1,5 @@
 """Bad-record quarantine (≙ the reference's skip-bad-batch-and-continue,
-S:231-236) and the Delta MERGE backend surface of the idempotent sink."""
+S:231-236) and the backend names the idempotent sink accepts."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -11,13 +11,11 @@ from pyspark.sql.types import (
 )
 
 from ferramenta_etl_spark.sinks import (
-    merge_insert_condition,
     quarantine_invalid,
     read_json_with_quarantine,
     split_by_rules,
     write_ignore_conflicts,
 )
-from ferramenta_etl_spark.sinks.idempotent import _delta_available
 
 
 def _rules():
@@ -78,32 +76,16 @@ def test_read_json_with_quarantine(spark, tmp_path):
     assert raw == {'{"id": broken', "not json at all"}
 
 
-def test_merge_condition_builder():
-    assert (
-        merge_insert_condition(["id_manifesto", "cd_parcela"])
-        == "t.`id_manifesto` <=> s.`id_manifesto` AND t.`cd_parcela` <=> s.`cd_parcela`"
-    )
-    with pytest.raises(ValueError):
-        merge_insert_condition([])
-
-
-def test_delta_backend_requires_package(spark, tmp_path):
+@pytest.mark.parametrize("backend", ["delta", "txlg", "Parquet"])
+def test_unknown_backend_names_rejected(spark, tmp_path, backend):
+    """A backend outside auto/parquet/txlog raises, naming the valid
+    choices, and writes nothing: a misspelled name must not fall
+    through to the parquet path."""
     df = spark.createDataFrame([(1, "a")], "k int, v string")
-    if _delta_available():
-        pytest.skip("delta installed; covered by test_delta_merge_roundtrip")
-    with pytest.raises(RuntimeError, match="delta-spark"):
-        write_ignore_conflicts(df, str(tmp_path / "t"), keys=["k"], backend="delta")
-
-
-@pytest.mark.skipif(not _delta_available(), reason="delta-spark not installed")
-def test_delta_merge_roundtrip(spark, tmp_path):
-    target = str(tmp_path / "delta_sink")
-    df1 = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
-    df2 = spark.createDataFrame([(2, "CHANGED"), (3, "c")], "k int, v string")
-    assert write_ignore_conflicts(df1, target, keys=["k"], backend="delta") == 2
-    assert write_ignore_conflicts(df2, target, keys=["k"], backend="delta") == 1
-    rows = {r.k: r.v for r in spark.read.format("delta").load(target).collect()}
-    assert rows == {1: "a", 2: "b", 3: "c"}
+    target = tmp_path / "t"
+    with pytest.raises(ValueError, match="auto, parquet, txlog"):
+        write_ignore_conflicts(df, str(target), keys=["k"], backend=backend)
+    assert not target.exists()
 
 
 def test_sink_quarantine_flag(spark, tmp_path):

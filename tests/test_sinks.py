@@ -1,7 +1,12 @@
 """Idempotent sink semantics (≙ ON CONFLICT DO NOTHING, S:214-218):
 write twice -> no duplicates; conflicting keys -> first writer wins."""
 
+import os
+import uuid
+
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from ferramenta_etl_spark.sinks import ensure_table, write_ignore_conflicts
@@ -51,9 +56,8 @@ def test_first_writer_wins(spark, target):
 
 def test_null_keys_conflict_null_safe(spark, target):
     """Cross-batch NULL-key conflicts (regression, r13): the anti-join
-    is <=> (anti_join_keys), matching merge_insert_condition and the
-    in-batch dedup — a plain = join would re-append the NULL-keyed row
-    on every rerun."""
+    is <=> (anti_join_keys), matching the in-batch dedup — a plain =
+    join would re-append the NULL-keyed row on every rerun."""
     df = spark.createDataFrame([(None, "n"), (1, "a")], "k int, v string")
     n1 = write_ignore_conflicts(df, target, keys=["k"])
     n2 = write_ignore_conflicts(df, target, keys=["k"])
@@ -339,3 +343,158 @@ def test_heartbeat_keeps_slow_holder_alive(spark, target):
             with _sink_lock(spark, target, timeout_s=1.0, stale_s=2.0):
                 pass
     assert not os.path.exists(lockfile)  # released by the rightful owner
+
+
+# ---------------------------------------------------------------------------
+# ON CONFLICT DO NOTHING, modelled in pure Python, on both backends
+# ---------------------------------------------------------------------------
+
+_ROW = "k1 int, k2 string, o int, v string"
+_KEYS = ["k1", "k2"]
+_row = st.tuples(
+    st.one_of(st.none(), st.integers(0, 3)),
+    st.one_of(st.none(), st.sampled_from(["a", "b"])),
+    st.one_of(st.none(), st.integers(0, 2)),
+    st.one_of(st.none(), st.sampled_from(["x", "y", "z"])),
+)
+
+
+@st.composite
+def _held_and_offered(draw):
+    """A held batch and an offered batch over a small key domain, so
+    in-batch duplicates of held and of new keys are common; about half
+    the time every offered key is a held one."""
+    held = draw(st.lists(_row, max_size=8))
+    offered = draw(st.lists(_row, max_size=12))
+    if held and draw(st.booleans()):
+        held_keys = [r[:2] for r in held]
+        offered = [draw(st.sampled_from(held_keys)) + r[2:] for r in offered]
+    return held, offered
+
+
+def _asc(x):
+    return (x is not None, x)  # Spark's ASC: NULLS FIRST
+
+
+def _first_per_key(rows):
+    """The row each key keeps: first under order_by=["o"], then the
+    non-key columns (o, v) as tiebreak."""
+    out = {}
+    for r in sorted(rows, key=lambda r: (_asc(r[2]), _asc(r[3]))):
+        out.setdefault(r[:2], r)
+    return out
+
+
+def _on_conflict_do_nothing(sink, offered):
+    """The rows a keyed INSERT ... ON CONFLICT DO NOTHING appends."""
+    return [r for k, r in _first_per_key(offered).items() if k not in sink]
+
+
+def _sink_rows(spark, path, backend):
+    from ferramenta_etl_spark.sinks import is_txlog_table, read_txlog
+
+    if backend == "txlog":
+        if not is_txlog_table(spark, path):
+            return []
+        df = read_txlog(spark, path)
+    else:
+        df = spark.read.parquet(path)
+    return sorted((tuple(r) for r in df.collect()), key=lambda r: tuple(map(_asc, r)))
+
+
+def _files_under(path):
+    return {os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs}
+
+
+@pytest.mark.parametrize("backend", ["parquet", "txlog"])
+@given(case=_held_and_offered())
+@example(case=([(1, "a", 0, "x")], []))  # empty batch
+@example(  # every offered key held, with in-batch duplicates
+    case=(
+        [(1, "a", 0, "x"), (None, "b", 1, "y")],
+        [(1, "a", 2, "z"), (1, "a", None, "y"), (None, "b", 0, "x")],
+    )
+)
+@example(  # NULL key parts; duplicates of held and of new keys
+    case=(
+        [(None, None, 1, "x"), (2, "a", 0, None)],
+        [
+            (None, None, 0, "y"), (None, None, None, "z"), (2, None, 1, "x"),
+            (2, None, 0, "y"), (2, "a", None, "z"), (3, "b", None, None),
+            (3, "b", None, "x"),
+        ],
+    )
+)
+@settings(
+    max_examples=6,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+def test_matches_on_conflict_do_nothing_model(spark, tmp_path, backend, case):
+    """The sink's whole row set after writing a held batch and then an
+    offered batch equals the pure-Python ON CONFLICT DO NOTHING model,
+    and so does the returned count; a batch that appends nothing adds
+    no file."""
+    held, offered = case
+    path = str(tmp_path / uuid.uuid4().hex)
+
+    def write(rows):
+        df = spark.createDataFrame(rows, _ROW)
+        return write_ignore_conflicts(df, path, keys=_KEYS, order_by=["o"], backend=backend)
+
+    model = _on_conflict_do_nothing({}, held)
+    assert write(held) == len(model)
+    sink = {r[:2]: r for r in model}
+    new = _on_conflict_do_nothing(sink, offered)
+    before = _files_under(path)
+    assert write(offered) == len(new)
+    expected = sorted(model + new, key=lambda r: tuple(map(_asc, r)))
+    assert _sink_rows(spark, path, backend) == expected
+    if not new:
+        assert _files_under(path) == before
+
+
+def _is_below(plan: str, upper: str, lower: str) -> bool:
+    """True iff a node whose line holds ``lower`` sits in the subtree
+    of a node whose line holds ``upper`` in a tree-string ``plan``."""
+    lines = plan.splitlines()
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    for i, line in enumerate(lines):
+        if upper not in line:
+            continue
+        for below in lines[i + 1 :]:
+            if depth(below) <= depth(line):
+                break
+            if lower in below:
+                return True
+    return False
+
+
+def test_conflict_check_runs_before_the_dedup(spark, target, monkeypatch):
+    """In the executed plan of the frame the parquet sink checkpoints,
+    the anti-join against the held keys sits BELOW the dedup window, so
+    the window's exchange and sorts see only the rows that survive."""
+    held = spark.createDataFrame([(i, f"v{i}") for i in range(50)], "k int, v string")
+    write_ignore_conflicts(held, target, keys=["k"])
+    offered = spark.createDataFrame(
+        [(i % 60, f"w{i}") for i in range(120)], "k int, v string"
+    )
+    checkpointed = []
+    cls = type(offered)
+    local_checkpoint = cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        checkpointed.append(self)
+        return local_checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    assert write_ignore_conflicts(offered, target, keys=["k"]) == 10
+    (frame,) = checkpointed
+    plan = frame._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "LeftAnti" in final and "Window" in final, final
+    assert _is_below(final, "Window", "LeftAnti"), final
+    assert not _is_below(final, "LeftAnti", "Window"), final
