@@ -249,9 +249,11 @@ def audio_fingerprints(media_df: DataFrame) -> DataFrame:
     frame the same audio), bit j = env[j] > env[j+1] — 64 gradient
     bits. Amplitude-scale invariant by construction; clips shorter
     than 65 samples (or malformed rows) yield a null fp — visible
-    downstream, batch intact. Narrow Arrow-batched map, no shuffle;
-    only 16 bytes/clip ever shuffle."""
-    from .multimodal import _bits_to_u64, _signed64
+    downstream, batch intact: every other fp is the exact int64 hash
+    whatever else shares its Arrow batch, and the null touches only its
+    own row. Narrow Arrow-batched map, no shuffle; only 16 bytes/clip
+    ever shuffle."""
+    from .multimodal import _bits_to_u64, _fp_frame, _signed64
 
     def batches(it: Iterator) -> Iterator:
         import numpy as np
@@ -277,12 +279,12 @@ def audio_fingerprints(media_df: DataFrame) -> DataFrame:
                         )
                     ]
                 )
-                # bit packing + signed conversion shared with the image
-                # dHash (review r12: two drifting copies is how the
-                # vectorization fix reaches one modality and not the
-                # other)
+                # bit packing, signed conversion and the output frame
+                # shared with the image dHash (review r12: two drifting
+                # copies is how the vectorization fix reaches one
+                # modality and not the other)
                 fps.append(_signed64(_bits_to_u64(env[:-1] > env[1:])))
-            yield pd.DataFrame({"doc_id": ids, "fp": fps})
+            yield _fp_frame(ids, fps)
 
     return media_df.select("doc_id", "media", "sample_rate").mapInPandas(
         batches, FINGERPRINT_SCHEMA

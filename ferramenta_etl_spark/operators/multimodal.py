@@ -565,6 +565,23 @@ def _signed64(fp: int) -> int:
     return fp - (1 << 64) if fp >= (1 << 63) else fp
 
 
+def _fp_frame(ids: list, fps: list):
+    """The (doc_id, fp) output batch every fingerprint emitter yields,
+    both columns nullable int64. Built from plain lists, a column that
+    holds a None would come out float64, and every fingerprint above
+    2**53 in the batch would lose its low bits on the way back to
+    LongType; pandas' ``Int64`` keeps each value exact and the null
+    confined to its own row."""
+    import pandas as pd
+
+    return pd.DataFrame(
+        {
+            "doc_id": pd.array(ids, dtype="Int64"),
+            "fp": pd.array(fps, dtype="Int64"),
+        }
+    )
+
+
 def dhash_images(media_df: DataFrame) -> DataFrame:
     """64-bit difference hash (dHash) per image — the standard
     perceptual fingerprint a multimodal corpus dedups on (round 12):
@@ -580,7 +597,9 @@ def dhash_images(media_df: DataFrame) -> DataFrame:
     format every codec decodes into — chain decode_images/resize_images
     in front for compressed containers). Malformed rows (null payload,
     byte length != w*h*3, non-positive dims) yield a null fp — visible
-    downstream, batch intact. Narrow Arrow-batched map, no shuffle,
+    downstream, batch intact: every other fp is the exact int64 hash
+    whatever else shares its Arrow batch, and the null touches only its
+    own row. Narrow Arrow-batched map, no shuffle,
     O(pixels) per row; the fingerprint relation that leaves this op is
     16 bytes/image, which is what ``image_near_dup_pairs`` shuffles."""
 
@@ -610,7 +629,7 @@ def dhash_images(media_df: DataFrame) -> DataFrame:
                 img = np.frombuffer(bytes(raw), dtype=np.uint8).reshape(h, w, 3)
                 # signed-long conversion keeps bit 63 inside LongType
                 fps.append(_signed64(_dhash64(img)))
-            yield pd.DataFrame({"doc_id": ids, "fp": fps})
+            yield _fp_frame(ids, fps)
 
     return media_df.select("doc_id", "media", "width", "height").mapInPandas(
         batches, DHASH_SCHEMA
@@ -626,8 +645,10 @@ def video_fingerprints(video_df: DataFrame, n_sample_frames: int = 8) -> DataFra
     noise must flip a bit in MOST sampled frames to flip it in the
     video fingerprint. Expects ``RAW_VIDEO_SCHEMA`` (media = n_frames
     concatenated H*W*3 uint8 frames); malformed rows (null payload,
-    byte length mismatch, no frames) yield a null fp. Narrow map;
-    16 bytes/video shuffle downstream."""
+    byte length mismatch, no frames) yield a null fp that touches only
+    their own row — every other fp is the exact int64 vote whatever
+    else shares its Arrow batch. Narrow map; 16 bytes/video shuffle
+    downstream."""
     if n_sample_frames < 1:
         raise ValueError(
             f"n_sample_frames must be >= 1, got {n_sample_frames}"
@@ -665,7 +686,7 @@ def video_fingerprints(video_df: DataFrame, n_sample_frames: int = 8) -> DataFra
                 for fi in take:
                     votes += np.where(_dhash_bits(frames[fi]), 1, -1)
                 fps.append(_signed64(_bits_to_u64(votes > 0)))
-            yield pd.DataFrame({"doc_id": ids, "fp": fps})
+            yield _fp_frame(ids, fps)
 
     return video_df.select(
         "doc_id", "media", "width", "height", "n_frames"

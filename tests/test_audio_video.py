@@ -602,3 +602,89 @@ def test_video_fingerprint_invariance_and_pairs(spark):
 
     with _pytest.raises(ValueError, match="n_sample_frames"):
         video_fingerprints(df, n_sample_frames=0)
+
+
+# ------------------------------------- exact fingerprints beside a null
+
+
+def _long(v: int) -> int:
+    """Unsigned 64-bit int -> the signed value a LongType column holds."""
+    return v - (1 << 64) if v >= (1 << 63) else v
+
+
+def _pack(bits) -> int:
+    """(64,) bool -> the LongType value with bit j = bits[j]."""
+    return _long(sum(1 << j for j, b in enumerate(bits) if b))
+
+
+def _assert_exact_beside_null(out_df, oracle, null_id):
+    """One partition holds every valid row and the malformed one: the
+    null stays on its own row and every other fp equals the numpy
+    oracle bit for bit (a float64 round trip would move the low bits
+    of any fp above 2**53)."""
+    assert any(int(float(v)) != v for v in oracle.values()), (
+        "inputs must include fingerprints float64 cannot hold"
+    )
+    fps = {r.doc_id: r.fp for r in out_df.collect()}
+    assert fps.pop(null_id) is None
+    assert fps == oracle
+
+
+def test_dhash_exact_beside_malformed_row(spark):
+    from ferramenta_etl_spark.operators.multimodal import _dhash64, dhash_images
+
+    rng = np.random.default_rng(21)
+    rows, oracle = [], {}
+    for d in range(6):
+        img = rng.integers(0, 256, (16 + d, 20, 3), dtype=np.uint8)
+        rows.append((d, img.tobytes(), 20, 16 + d))
+        oracle[d] = _long(_dhash64(img))
+    rows.insert(3, (99, b"\x00" * 10, 20, 16))  # byte length != w*h*3
+    df = spark.createDataFrame(
+        rows, "doc_id long, media binary, width long, height long"
+    ).coalesce(1)
+    _assert_exact_beside_null(dhash_images(df), oracle, 99)
+
+
+def test_video_fingerprint_exact_beside_malformed_row(spark):
+    from ferramenta_etl_spark.operators.multimodal import (
+        _dhash_bits,
+        video_fingerprints,
+    )
+
+    rng = np.random.default_rng(22)
+    rows, oracle = [], {}
+    for d in range(6):
+        w, h, nf = 12 + d, 10, 20
+        vid = rng.integers(0, 256, (nf, h, w, 3), dtype=np.uint8)
+        rows.append((d, vid.tobytes(), w, h, nf))
+        # majority vote over 8 evenly spaced frames, ties break 0
+        take = np.unique(np.linspace(0, nf - 1, 8).astype(int))
+        votes = sum(np.where(_dhash_bits(vid[i]), 1, -1) for i in take)
+        oracle[d] = _pack(votes > 0)
+    rows.insert(3, (99, b"\x00" * 7, 4, 4, 2))  # byte length mismatch
+    df = spark.createDataFrame(
+        rows,
+        "doc_id long, media binary, width long, height long, n_frames long",
+    ).coalesce(1)
+    _assert_exact_beside_null(video_fingerprints(df), oracle, 99)
+
+
+def test_audio_fingerprint_exact_beside_malformed_row(spark):
+    from ferramenta_etl_spark.operators.audio import audio_fingerprints
+
+    rng = np.random.default_rng(23)
+    rows, oracle = [], {}
+    for d in range(6):
+        pcm = rng.integers(-20000, 20000, 4000 + 100 * d).astype("<i2")
+        rows.append((d, pcm.tobytes(), 8000))
+        # |PCM| envelope over 65 equal frames, bit j = env[j] > env[j+1]
+        env = np.array(
+            [f.mean() for f in np.array_split(np.abs(pcm.astype(np.int64)), 65)]
+        )
+        oracle[d] = _pack(env[:-1] > env[1:])
+    rows.insert(3, (99, b"\x00" * 7, 8000))  # odd byte length
+    df = spark.createDataFrame(
+        rows, "doc_id long, media binary, sample_rate long"
+    ).coalesce(1)
+    _assert_exact_beside_null(audio_fingerprints(df), oracle, 99)
