@@ -40,6 +40,20 @@ STATUS_PENDING, STATUS_RUNNING, STATUS_OK, STATUS_FAIL = "pending", "running", "
 CANCEL_POLL_S = 0.2
 
 
+def _compile_counters(spark: SparkSession) -> tuple[int, int] | None:
+    """(generated classes compiled, HotSpot compile ms) so far in the
+    session's JVM, or None when either counter cannot be read. Both are
+    process-wide: concurrent jobs share them."""
+    try:
+        jvm = spark._jvm
+        classes = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+        jit = jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+        return int(classes.getCount()), int(jit.getTotalCompilationTime())
+    except Exception:  # noqa: BLE001 — observability must never fail a run
+        log.debug("compile counters unreadable", exc_info=True)
+        return None
+
+
 @dataclass
 class Job:
     name: str
@@ -138,11 +152,39 @@ class JobRegistry:
         again every ``CANCEL_POLL_S`` until their callables return
         (cancelJobGroup only hits actions already submitted, and a job
         submits several in turn); then PipelineError carries the first
-        failure and the results."""
+        failure and the results.
+
+        Each call logs one INFO line with the jobs run, the generated
+        classes compiled and the HotSpot compile time during the call.
+        The counters are process-wide, so they cover the whole call and
+        are not split per job."""
         run = runner or self.run_one
         names = list(self.jobs)  # snapshot, ≙ E:371
         if not names:
             return []
+        before = _compile_counters(spark)
+        try:
+            return self._run_concurrently(spark, names, run, fail_fast)
+        finally:
+            after = _compile_counters(spark) if before is not None else None
+            if after is None:
+                log.info("run_all: %d jobs, compile counters unavailable", len(names))
+            else:
+                log.info(
+                    "run_all: %d jobs, %d generated classes compiled, %d ms "
+                    "HotSpot compile (process-wide, whole call)",
+                    len(names),
+                    after[0] - before[0],
+                    after[1] - before[1],
+                )
+
+    def _run_concurrently(
+        self,
+        spark: SparkSession,
+        names: list[str],
+        run: Callable[[SparkSession, str], JobResult],
+        fail_fast: bool,
+    ) -> list[JobResult]:
         stop = threading.Event()
 
         def start(name: str) -> JobResult:

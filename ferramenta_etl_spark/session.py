@@ -41,6 +41,17 @@ def get_session(
       the events source (sources/tables.py).
     - Arrow enabled so mapInPandas/pandas_udf paths move columnar batches,
       not pickled rows.
+    - Generated code compiled once per process, not once per run. The
+      cache of compiled classes holds 1000 (Spark's default is 100); the
+      five shipped jobs generate about 110-115 classes per run, so at 100
+      every warm re-run evicted its own classes and compiled them again.
+      It is a static conf, read once per JVM when the first code
+      generator starts, so like the heap it has no effect if a
+      SparkContext already exists in the process. And the whole-stage
+      class name leaves out the codegen stage id: AQE numbers the stages
+      in the order they are planned, which varies from run to run, and
+      a renumbered stage missed the cache with otherwise identical code.
+      ``extra_conf`` can still override either.
     """
     cpus = default_parallelism()
     builder = (
@@ -72,6 +83,11 @@ def get_session(
         # footer statistics instead of data pages (off by default)
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # compiled generated classes: an LRU above the shipped jobs'
+        # ~115-class working set, and class names without the run-to-run
+        # varying stage id, so a re-run reuses every class
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.showConsoleProgress", "false")
     )

@@ -313,6 +313,31 @@ def cleanup_staging_tables(spark, cfg: JdbcConfig, table: str) -> list[str]:
     return dropped
 
 
+def _index_new_target(
+    run: Callable[[str], int],
+    target: str,
+    index: str,
+    keys: Sequence[str],
+    df: DataFrame,
+) -> None:
+    """Index the keys of a target the sink has just created, so the
+    NOT EXISTS insert probes the index instead of scanning the target
+    for every staged row (Derby: a re-run took 0.45 s against 20 k
+    target rows and 241 s against 40 k without it). String keys are
+    left out: they land as LOBs (Derby CLOB, SQL Server NVARCHAR(MAX)),
+    which these engines cannot index, and they compare through a CAST
+    no index serves. The index only speeds the check, so a failure to
+    build it is logged, not raised."""
+    strings = {f.name for f in df.schema.fields if f.dataType.typeName() == "string"}
+    cols = [k for k in keys if k not in strings]
+    if not cols:
+        return
+    try:
+        run(f"CREATE INDEX {index} ON {target} ({', '.join(_qcol(k) for k in cols)})")
+    except Exception as exc:  # noqa: BLE001 — a missing index is slow, not wrong
+        log.warning("could not index %s on %s: %s", target, cols, exc)
+
+
 def write_jdbc_ignore_conflicts(
     df: DataFrame,
     cfg: JdbcConfig,
@@ -334,6 +359,11 @@ def write_jdbc_ignore_conflicts(
     ``upsert=False`` (default): the reference's first-writer-wins
     ON CONFLICT DO NOTHING (S:214-218). ``upsert=True``: last-writer
     -wins DO UPDATE / ANSI MERGE for changed-row reloads.
+
+    ``ensure_target`` creates a missing target from the staged schema
+    and indexes its keys: PostgreSQL gets the UNIQUE index its
+    ON CONFLICT (keys) requires; other engines get a plain index on the
+    non-string keys, built only when this call created the table.
 
     In-batch duplicates are collapsed BEFORE staging (ON CONFLICT also
     collapses them server-side, but the NOT EXISTS dialect would insert
@@ -359,6 +389,7 @@ def write_jdbc_ignore_conflicts(
         raise ValueError(f"keys {missing} not in dataframe columns {df.columns}")
     target = _ident(table)
     staging = _ident(staging_table or _default_staging(table))
+    index = _ident(f"{table}__key")
     dialect = jdbc_dialect(cfg.url)
     cast_keys = None
     if string_key_cast is not None and dialect == "generic":
@@ -387,13 +418,19 @@ def write_jdbc_ignore_conflicts(
         if ensure_target:
             # ≙ the reference's idempotent DDL bootstrap (S:166-186):
             # first write to a fresh target creates it from the staged
-            # schema. PG has a native IF NOT EXISTS; the generic branch
-            # swallows the already-exists error (the subsequent INSERT
-            # surfaces any real failure).
+            # schema, with an index on the keys (the staging table has
+            # none to copy). PG has a native IF NOT EXISTS, and its
+            # ON CONFLICT (keys) needs a matching UNIQUE index; the
+            # generic branch swallows the already-exists error (the
+            # subsequent INSERT surfaces any real failure).
             if dialect == "postgresql":
                 run(
                     f"CREATE TABLE IF NOT EXISTS {target} "
                     f"(LIKE {staging} INCLUDING ALL)"
+                )
+                run(
+                    f"CREATE UNIQUE INDEX IF NOT EXISTS {index} ON {target} "
+                    f"({', '.join(_qcol(k) for k in keys)})"
                 )
             else:
                 try:
@@ -403,6 +440,8 @@ def write_jdbc_ignore_conflicts(
                     )
                 except Exception:  # noqa: BLE001 — already exists
                     pass
+                else:
+                    _index_new_target(run, target, index, keys, df)
         inserted = run(sql)
         # ≙ the reference's per-batch read-count log lines (S:230, S:242):
         # the server's update count is the sink's ground-truth row count,

@@ -47,6 +47,33 @@ def test_flagship_broadcasts_dimensions(spark):
     assert plan.count("BroadcastHashJoin") >= 3
 
 
+def test_latest_manifesto_broadcast_gated_on_widened_estimate(spark, monkeypatch):
+    """latest_manifesto broadcasts only while the base dims' estimate,
+    times _LATEST_MANIFESTO_WIDTH, is under the cap; the dim chain keeps
+    the plain estimate. Checked at the edges of the cap, on the gate and
+    on the flagship's analyzed plan (hint count: latest_manifesto's
+    subtree holds the chain's hint)."""
+    import ferramenta_etl_spark.plans.flagship as fmod
+    from ferramenta_etl_spark.sources import load_table
+
+    dims = [load_table(spark, SF_SMOKE, t) for t in ("customer", "nation", "region")]
+    est = sum(int(d._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()) for d in dims)
+    wide = int(est * fmod._LATEST_MANIFESTO_WIDTH)
+
+    def hints(cap: int) -> int:
+        monkeypatch.setattr(fmod, "_BCAST_DIM_CAP_BYTES", cap)
+        plan = fmod.flagship.__wrapped__(spark, SF_SMOKE)
+        return plan._jdf.queryExecution().analyzed().toString().count("strategy=broadcast")
+
+    assert hints(wide + 1) == 2
+    assert fmod._dims_fit_broadcast(*dims, widen=fmod._LATEST_MANIFESTO_WIDTH)
+    assert hints(wide) == 1
+    assert not fmod._dims_fit_broadcast(*dims, widen=fmod._LATEST_MANIFESTO_WIDTH)
+    assert fmod._dims_fit_broadcast(*dims)
+    assert hints(est) == 0
+    assert not fmod._dims_fit_broadcast(*dims)
+
+
 @pytest.mark.parametrize("query", ["topk_per_group", "embedding_cosine_topk"])
 def test_topk_uses_window_group_limit(spark, query):
     from ferramenta_etl_spark.plans import all_queries
