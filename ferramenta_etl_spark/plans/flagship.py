@@ -46,19 +46,19 @@ from ..sources import load_table
 # (dims genuinely beyond broadcast scale) the sort-merge plan returns.
 _BCAST_DIM_CAP_BYTES = 256 * 1024 * 1024
 
-# latest_manifesto is one row per customer, but the base-table estimate
-# is compressed parquet bytes, while the broadcast is a hashed relation of
-# uncompressed rows that also carry the picked bridge columns and two
-# computed money columns. Measured at sf0.1: base estimate 320 KB,
-# latest_manifesto broadcast 4.3 MB (13.5x; the chain's 2.2 MB). Its
-# broadcast is gated on the base estimate times this factor, so near the
-# cap the relation actually broadcast stays under it.
-_LATEST_MANIFESTO_WIDTH = 16.0
+# The base-table estimate is compressed parquet bytes, while each
+# broadcast is a hashed relation of uncompressed rows. Measured at sf0.1:
+# base estimate 320 KB, dim chain broadcast 2.2 MB (6.9x),
+# latest_manifesto broadcast 4.3 MB (13.5x; it also carries the picked
+# bridge columns and two computed money columns). Every broadcast
+# decision is gated on the base estimate times this factor, so near the
+# cap the relations actually broadcast stay under it.
+_DIM_BROADCAST_WIDTH = 16.0
 
 
-def _dims_fit_broadcast(*dims: DataFrame, widen: float = 1.0) -> bool:
+def _dims_fit_broadcast(*dims: DataFrame) -> bool:
     """True when Catalyst's size estimate of every given relation sums,
-    times ``widen``, under ``_BCAST_DIM_CAP_BYTES``. Stats-only
+    times ``_DIM_BROADCAST_WIDTH``, under ``_BCAST_DIM_CAP_BYTES``. Stats-only
     (analysis, no job); unknown estimates (Catalyst returns Long.Max for
     some sources) disable the hint — fail toward the always-correct
     sort-merge plan."""
@@ -71,7 +71,7 @@ def _dims_fit_broadcast(*dims: DataFrame, widen: float = 1.0) -> bool:
         if est < 0 or est >= (1 << 62):  # unknown/absent statistics
             return False
         total += est
-    return total * widen < _BCAST_DIM_CAP_BYTES
+    return total * _DIM_BROADCAST_WIDTH < _BCAST_DIM_CAP_BYTES
 
 
 def flagship(
@@ -120,9 +120,6 @@ def flagship(
     from ..sources.tables import ensure_scan_parallelism
 
     dims_small = _dims_fit_broadcast(customer, nation, region)
-    latest_small = _dims_fit_broadcast(
-        customer, nation, region, widen=_LATEST_MANIFESTO_WIDTH
-    )
     if dims_small:
         lineitem = ensure_scan_parallelism(lineitem, spread_by=("l_orderkey",))
 
@@ -210,7 +207,8 @@ def flagship(
     # SortMergeJoin — the explicit hint restores the broadcast the
     # pre-restructure plan already applied to these dims, and with it
     # the picked side's Exchange+Sort disappear. Gated on the base
-    # tables' own stats so dims beyond broadcast scale keep the SMJ.
+    # tables' own (widened) stats so dims beyond broadcast scale keep
+    # the SMJ.
     if dims_small:
         chain = F.broadcast(chain)
     latest_manifesto = (
@@ -239,12 +237,11 @@ def flagship(
     # so every prior round's plan sort-merge-joined it: the ONLY
     # remaining row-scale Exchange+Sort in the query was the parcelas
     # fan-out stream being hashed on o_custkey just to meet this
-    # dimension-sized relation. Broadcasting it (the chain's stats gate,
-    # widened by _LATEST_MANIFESTO_WIDTH) removes that exchange outright
-    # — the final select becomes a pure chain of broadcast joins over
-    # the lineitem scan, the §2.4 "remove shuffles outright" shape. Past
-    # the cap the SMJ returns.
-    m = (F.broadcast(latest_manifesto) if latest_small else latest_manifesto).alias("m")
+    # dimension-sized relation. Broadcasting it (the chain's stats gate)
+    # removes that exchange outright — the final select becomes a pure
+    # chain of broadcast joins over the lineitem scan, the §2.4 "remove
+    # shuffles outright" shape. Past the cap the SMJ returns.
+    m = (F.broadcast(latest_manifesto) if dims_small else latest_manifesto).alias("m")
     c = supplier.alias("c")  # motorista (S:94)
     d = supplier.alias("d")  # agregado  (S:95)
     bank = nation.alias("bank")  # referencia bancaria (S:96)

@@ -16,15 +16,6 @@ from .layout import (  # noqa: F401
     write_zordered,
     zorder_value,
 )
-from .txlog import (  # noqa: F401
-    TxLogConflict,
-    history_txlog,
-    is_txlog_table,
-    read_txlog,
-    snapshot_txlog,
-    vacuum_txlog,
-    write_merge_txlog,
-)
 from .quarantine import (  # noqa: F401
     quarantine_invalid,
     read_json_with_quarantine,

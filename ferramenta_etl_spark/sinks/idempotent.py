@@ -25,18 +25,18 @@ Scale notes:
 - the anti-join is a plain equi-join: broadcastable when the sink is
   small, AQE-skew-handled when it is not.
 
-Atomicity: the parquet backend's anti-join + append is not atomic by
-itself — two jobs could both pass the anti-join and append the same key
-— so it runs under an advisory writer LOCK (atomic-create sibling file,
+The sink is a plain directory of parquet files, so any parquet reader
+(Spark, DuckDB ``read_parquet`` globs) reads it in place.
+
+Atomicity: the anti-join + append is not atomic by itself — two jobs
+could both pass the anti-join and append the same key — so it runs
+under an advisory writer LOCK (atomic-create sibling file,
 ``_sink_lock``) that serializes concurrent writers on any filesystem
-with atomic exclusive create (local, HDFS); on plain S3 the lock is
-best-effort and the single-writer assertion stands (the reference had
-the same at-most-once guarantee only per-process). For true ACID upsert
-under concurrent writers the ``txlog`` backend sits behind the SAME
-call signature (≙ ON CONFLICT's server-side conflict check, S:214-218):
-the self-contained transaction-log format in :mod:`.txlog`, lock-free
-optimistic concurrency with atomic version publish, executed in CI
-including a concurrent-append race test.
+with atomic exclusive create (local, HDFS). A store without that
+primitive (plain S3) cannot make any file-based commit exclusive, so
+there concurrent writers to one sink are unsafe and each sink needs a
+single writer (the reference had the same at-most-once guarantee only
+per process).
 """
 
 from __future__ import annotations
@@ -68,14 +68,14 @@ def _sink_lock(
     stale_s: float = 600.0,
     poll_s: float = 0.1,
 ):
-    """Advisory writer lock for the parquet anti-join + append sequence.
+    """Advisory writer lock for the anti-join + append sequence.
 
     Two concurrent ``write_ignore_conflicts`` calls can both pass the
-    anti-join before either appends and both land the same key — the
-    documented race of the parquet backend. This closes it for every
-    filesystem with ATOMIC exclusive create: the lock is a sibling file
-    ``<path>.__lock__``, created via ``java.io.File.createNewFile`` on
-    local paths (the documented atomic O_CREAT|O_EXCL primitive —
+    anti-join before either appends and both land the same key. This
+    closes that race for every filesystem with ATOMIC exclusive create:
+    the lock is a sibling file ``<path>.__lock__``, created via
+    ``java.io.File.createNewFile`` on local paths (the documented
+    atomic O_CREAT|O_EXCL primitive —
     Hadoop's local ``create(path, overwrite=false)`` is check-then-act
     and two contenders can both pass the exists check) and via
     ``fs.create(p, false)`` elsewhere (atomic on HDFS: a NameNode
@@ -86,8 +86,7 @@ def _sink_lock(
     competing waiter's FRESH lock and let two writers hold at once);
     the rename winner clears the orphan and re-races the create. On
     object stores WITHOUT atomic exclusive create (plain S3), this
-    degrades to best-effort — the single-writer assertion stands there;
-    use the ``txlog`` backend for true ACID upsert.
+    degrades to best-effort and each sink needs a single writer.
 
     OWNERSHIP + HEARTBEAT (ADVICE r07): the winner stamps a unique token
     into the lock file and a daemon thread refreshes the lock mtime every
@@ -375,15 +374,11 @@ def dedup_batch(
     )
 
 
-_BACKENDS = ("auto", "parquet", "txlog")
-
-
 def write_ignore_conflicts(
     df: DataFrame,
     path: str,
     keys: Sequence[str],
     order_by: Sequence[str] = (),
-    backend: str = "auto",
     partition_cols: Sequence[str] = (),
     bad_records_path: str | None = None,
     rules=None,
@@ -398,14 +393,8 @@ def write_ignore_conflicts(
        deterministic: order_by, then the non-key columns as tiebreak);
     3. append them.
 
-    ``backend``: ``parquet`` (anti-join + append, serialized under an
-    advisory writer LOCK — see below), ``txlog`` (ACID MERGE on the
-    self-contained transaction-log format, :mod:`.txlog` — lock-free
-    optimistic concurrency), or ``auto`` (= parquet). Any other name
-    raises ``ValueError``.
-
-    Concurrency (parquet backend): the anti-join + append sequence runs
-    under :func:`_sink_lock` — an atomic-create sibling lock file that
+    Concurrency: the anti-join + append sequence runs under
+    :func:`_sink_lock` — an atomic-create sibling lock file that
     serializes concurrent writers to the same sink, so two interleaved
     batches with overlapping keys can no longer both pass the anti-join
     and double-append a key (the race VERDICT r05 #5 asked to pin or
@@ -413,7 +402,8 @@ def write_ignore_conflicts(
     (:class:`SinkLockTimeout` on expiry); ``lock_stale_s`` is the age
     past which a crashed writer's orphaned lock is taken over. The lock
     is ADVISORY and relies on atomic exclusive create (local/HDFS); on
-    plain S3 it is best-effort only — use the txlog backend there.
+    plain S3 it is best-effort only, so give each sink a single writer
+    there.
 
     ``partition_cols`` lays the sink out hive-partitioned (the 100 TB
     posture: date-partitioned fact sinks) and, critically, PRUNES the
@@ -434,10 +424,6 @@ def write_ignore_conflicts(
     Returns the number of rows appended. Re-running with the same input
     appends 0.
     """
-    if backend not in _BACKENDS:
-        raise ValueError(
-            f"unknown sink backend {backend!r}; choose one of {', '.join(_BACKENDS)}"
-        )
     if rules is not None and bad_records_path is None:
         raise ValueError(
             "rules require bad_records_path — refusing to drop rows "
@@ -457,18 +443,6 @@ def write_ignore_conflicts(
             f"{list(keys)} — otherwise a conflict hiding in an untouched "
             "partition would escape the pruned anti-join"
         )
-    if backend == "txlog":
-        if partition_cols:
-            raise ValueError(
-                "the txlog backend does not hive-partition; its conflict "
-                "check is pruned by per-file key min/max stats instead "
-                "(sinks/txlog.py) — drop partition_cols or use the "
-                "parquet backend"
-            )
-        from .txlog import write_merge_txlog
-
-        return write_merge_txlog(df, path, keys, order_by=order_by)
-
     with _sink_lock(spark, path, timeout_s=lock_timeout_s, stale_s=lock_stale_s):
         return _write_parquet_locked(spark, df, path, keys, partition_cols, order_by)
 

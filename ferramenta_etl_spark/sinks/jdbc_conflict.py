@@ -4,7 +4,7 @@ The reference loads PostgreSQL with ``INSERT INTO <target> (cols)
 VALUES ... ON CONFLICT (id_manifesto, cd_parcela) DO NOTHING``
 (``Select de Importação de Dados.py:214-218``) — the server's PK index
 does the conflict check, so concurrent loaders and re-runs are atomic
-and duplicate-free. The parquet backend in ``sinks.idempotent``
+and duplicate-free. The parquet sink in ``sinks.idempotent``
 re-creates those semantics with an anti-join under an advisory lock;
 THIS module provides them on the reference's actual target class
 (a SQL server reachable over JDBC), where the right design at scale is:
@@ -368,7 +368,7 @@ def write_jdbc_ignore_conflicts(
     In-batch duplicates are collapsed BEFORE staging (ON CONFLICT also
     collapses them server-side, but the NOT EXISTS dialect would insert
     both — the sink must behave identically across dialects), matching
-    the parquet backend's policy.
+    the parquet sink's policy.
 
     ``string_key_cast``: on the generic dialect, string-typed KEY
     columns compare as ``CAST(k AS <this type>)`` on both sides of the

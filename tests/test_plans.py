@@ -48,17 +48,17 @@ def test_flagship_broadcasts_dimensions(spark):
 
 
 def test_latest_manifesto_broadcast_gated_on_widened_estimate(spark, monkeypatch):
-    """latest_manifesto broadcasts only while the base dims' estimate,
-    times _LATEST_MANIFESTO_WIDTH, is under the cap; the dim chain keeps
-    the plain estimate. Checked at the edges of the cap, on the gate and
-    on the flagship's analyzed plan (hint count: latest_manifesto's
-    subtree holds the chain's hint)."""
+    """The flagship's broadcasts (the dim chain and latest_manifesto)
+    are gated on one estimate: the base dims' size times
+    _DIM_BROADCAST_WIDTH. Checked at the edge of the cap, on the gate
+    and on the flagship's analyzed plan: below it both hints are
+    present, at it neither is."""
     import ferramenta_etl_spark.plans.flagship as fmod
     from ferramenta_etl_spark.sources import load_table
 
     dims = [load_table(spark, SF_SMOKE, t) for t in ("customer", "nation", "region")]
     est = sum(int(d._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()) for d in dims)
-    wide = int(est * fmod._LATEST_MANIFESTO_WIDTH)
+    wide = int(est * fmod._DIM_BROADCAST_WIDTH)
 
     def hints(cap: int) -> int:
         monkeypatch.setattr(fmod, "_BCAST_DIM_CAP_BYTES", cap)
@@ -66,11 +66,8 @@ def test_latest_manifesto_broadcast_gated_on_widened_estimate(spark, monkeypatch
         return plan._jdf.queryExecution().analyzed().toString().count("strategy=broadcast")
 
     assert hints(wide + 1) == 2
-    assert fmod._dims_fit_broadcast(*dims, widen=fmod._LATEST_MANIFESTO_WIDTH)
-    assert hints(wide) == 1
-    assert not fmod._dims_fit_broadcast(*dims, widen=fmod._LATEST_MANIFESTO_WIDTH)
     assert fmod._dims_fit_broadcast(*dims)
-    assert hints(est) == 0
+    assert hints(wide) == 0
     assert not fmod._dims_fit_broadcast(*dims)
 
 

@@ -1,5 +1,5 @@
 """Bad-record quarantine (≙ the reference's skip-bad-batch-and-continue,
-S:231-236) and the backend names the idempotent sink accepts."""
+S:231-236)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -74,18 +74,6 @@ def test_read_json_with_quarantine(spark, tmp_path):
     assert valid.columns == ["id", "name"]
     raw = {r.raw_record for r in spark.read.parquet(qpath).collect()}
     assert raw == {'{"id": broken', "not json at all"}
-
-
-@pytest.mark.parametrize("backend", ["delta", "txlg", "Parquet"])
-def test_unknown_backend_names_rejected(spark, tmp_path, backend):
-    """A backend outside auto/parquet/txlog raises, naming the valid
-    choices, and writes nothing: a misspelled name must not fall
-    through to the parquet path."""
-    df = spark.createDataFrame([(1, "a")], "k int, v string")
-    target = tmp_path / "t"
-    with pytest.raises(ValueError, match="auto, parquet, txlog"):
-        write_ignore_conflicts(df, str(target), keys=["k"], backend=backend)
-    assert not target.exists()
 
 
 def test_sink_quarantine_flag(spark, tmp_path):

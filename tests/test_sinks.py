@@ -65,6 +65,19 @@ def test_null_keys_conflict_null_safe(spark, target):
     assert spark.read.parquet(target).count() == 2
 
 
+def test_nan_double_key_conflicts(spark, target):
+    """A NaN double key conflicts with the held NaN key, as NaN = NaN in
+    Spark's joins and in a PostgreSQL primary-key index: a rerun that
+    offers it again appends only the new key."""
+    nan = float("nan")
+    df1 = spark.createDataFrame([(1.0, "a"), (nan, "n1")], "k double, v string")
+    df2 = spark.createDataFrame([(2.0, "b"), (nan, "n2")], "k double, v string")
+    assert write_ignore_conflicts(df1, target, keys=["k"]) == 2
+    assert write_ignore_conflicts(df2, target, keys=["k"]) == 1
+    rows = spark.read.parquet(target).collect()
+    assert sorted(r.v for r in rows) == ["a", "b", "n1"]
+
+
 def test_in_batch_duplicates_collapse(spark, target):
     df = spark.createDataFrame([(1, "x"), (1, "y"), (2, "z")], "k int, v string")
     n = write_ignore_conflicts(df, target, keys=["k"], order_by=["v"])
@@ -72,11 +85,19 @@ def test_in_batch_duplicates_collapse(spark, target):
 
 
 def test_schema_contract_on_append(spark, target):
+    """A renamed column and a same-named column whose type drifted both
+    raise before anything is appended: mixed-type part files would
+    poison every later read of the sink."""
     df1 = spark.createDataFrame([(1, "a")], "k int, v string")
     write_ignore_conflicts(df1, target, keys=["k"])
+    before = _files_under(target)
     bad = spark.createDataFrame([(2, "b")], "k int, OTHER string")
     with pytest.raises(SchemaContractError):
         write_ignore_conflicts(bad, target, keys=["k"])
+    drifted = spark.createDataFrame([(2, 2.0)], "k int, v double")
+    with pytest.raises(SchemaContractError, match="drift"):
+        write_ignore_conflicts(drifted, target, keys=["k"])
+    assert _files_under(target) == before
 
 
 def test_ensure_table_idempotent(spark, target):
@@ -346,7 +367,7 @@ def test_heartbeat_keeps_slow_holder_alive(spark, target):
 
 
 # ---------------------------------------------------------------------------
-# ON CONFLICT DO NOTHING, modelled in pure Python, on both backends
+# ON CONFLICT DO NOTHING, modelled in pure Python
 # ---------------------------------------------------------------------------
 
 _ROW = "k1 int, k2 string, o int, v string"
@@ -390,23 +411,10 @@ def _on_conflict_do_nothing(sink, offered):
     return [r for k, r in _first_per_key(offered).items() if k not in sink]
 
 
-def _sink_rows(spark, path, backend):
-    from ferramenta_etl_spark.sinks import is_txlog_table, read_txlog
-
-    if backend == "txlog":
-        if not is_txlog_table(spark, path):
-            return []
-        df = read_txlog(spark, path)
-    else:
-        df = spark.read.parquet(path)
-    return sorted((tuple(r) for r in df.collect()), key=lambda r: tuple(map(_asc, r)))
-
-
 def _files_under(path):
     return {os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs}
 
 
-@pytest.mark.parametrize("backend", ["parquet", "txlog"])
 @given(case=_held_and_offered())
 @example(case=([(1, "a", 0, "x")], []))  # empty batch
 @example(  # every offered key held, with in-batch duplicates
@@ -430,7 +438,7 @@ def _files_under(path):
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
-def test_matches_on_conflict_do_nothing_model(spark, tmp_path, backend, case):
+def test_matches_on_conflict_do_nothing_model(spark, tmp_path, case):
     """The sink's whole row set after writing a held batch and then an
     offered batch equals the pure-Python ON CONFLICT DO NOTHING model,
     and so does the returned count; a batch that appends nothing adds
@@ -440,7 +448,7 @@ def test_matches_on_conflict_do_nothing_model(spark, tmp_path, backend, case):
 
     def write(rows):
         df = spark.createDataFrame(rows, _ROW)
-        return write_ignore_conflicts(df, path, keys=_KEYS, order_by=["o"], backend=backend)
+        return write_ignore_conflicts(df, path, keys=_KEYS, order_by=["o"])
 
     model = _on_conflict_do_nothing({}, held)
     assert write(held) == len(model)
@@ -449,7 +457,8 @@ def test_matches_on_conflict_do_nothing_model(spark, tmp_path, backend, case):
     before = _files_under(path)
     assert write(offered) == len(new)
     expected = sorted(model + new, key=lambda r: tuple(map(_asc, r)))
-    assert _sink_rows(spark, path, backend) == expected
+    got = [tuple(r) for r in spark.read.parquet(path).collect()]
+    assert sorted(got, key=lambda r: tuple(map(_asc, r))) == expected
     if not new:
         assert _files_under(path) == before
 
