@@ -23,7 +23,16 @@ Scale notes:
   parts included — the window's ``partitionBy`` groups NULLs together
   and the anti-join compares with ``<=>``;
 - the anti-join is a plain equi-join: broadcastable when the sink is
-  small, AQE-skew-handled when it is not.
+  small, AQE-skew-handled when it is not;
+- the append is rebalanced on the partition columns (round-robin when
+  there are none), so AQE's coalescing sizes the files it adds: a small
+  batch lands as one file per partition value, whatever the batch's
+  input partitioning, and at scale the files are advisory-sized, with
+  AQE's rebalance skew split breaking up an oversized value. Fewer,
+  larger files keep each file's dictionary pages and footer from
+  repeating, and leave fewer files for the next run's held-key scan to
+  open. The cost is one exchange over the rows being appended only;
+  the held rows never move.
 
 The sink is a plain directory of parquet files, so any parquet reader
 (Spark, DuckDB ``read_parquet`` globs) reads it in place.
@@ -391,7 +400,10 @@ def write_ignore_conflicts(
        only), skipped while the sink holds no data;
     2. dedup the survivors on ``keys`` (:func:`dedup_batch` —
        deterministic: order_by, then the non-key columns as tiebreak);
-    3. append them.
+    3. rebalance them on ``partition_cols`` (round-robin without) and
+       append them: AQE sizes the files, so a small batch adds one file
+       per partition value. This costs one exchange, bounded by the
+       appended rows.
 
     Concurrency: the anti-join + append sequence runs under
     :func:`_sink_lock` — an atomic-create sibling lock file that
@@ -500,11 +512,17 @@ def _write_parquet_locked(
             existing = existing.filter(_touched_partition_filter(df, partition_cols))
         existing_keys = existing.select(*keys)
         fresh = anti_join_keys(df, existing_keys, list(keys))
-    # Materialize the survivors BEFORE appending: localCheckpoint cuts
-    # the lineage back to the target parquet, so a task retry / cache
-    # eviction during the append can never re-scan the path mid-write
-    # and double-read its own output (plain .cache() could recompute).
-    fresh = dedup_batch(fresh, keys, order_by).localCheckpoint(eager=True)
+    # Rebalance the survivors so the append lands as AQE-sized files, one
+    # per partition value on a small batch (skewed values are split).
+    # Materialize them BEFORE appending: localCheckpoint cuts the lineage
+    # back to the target parquet, so a task retry / cache eviction during
+    # the append can never re-scan the path mid-write and double-read its
+    # own output (plain .cache() could recompute).
+    fresh = (
+        dedup_batch(fresh, keys, order_by)
+        .hint("rebalance", *[F.col(c) for c in partition_cols])
+        .localCheckpoint(eager=True)
+    )
     n = fresh.count()
     if n:
         w = fresh.write.mode("append")

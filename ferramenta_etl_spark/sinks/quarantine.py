@@ -36,6 +36,24 @@ CORRUPT_COL = "_corrupt_record"
 VIOLATIONS_COL = "_violations"
 
 
+def _tag_violations(df: DataFrame, rules: Mapping[str, Column]) -> DataFrame:
+    """``df`` plus ``_violations``: the names of the rules each row
+    fails, NULL counting as a failure."""
+    checks = F.array(
+        *[
+            F.when(~cond.eqNullSafe(F.lit(True)), F.lit(name))
+            for name, cond in rules.items()
+        ]
+    )
+    return df.withColumn(VIOLATIONS_COL, F.filter(checks, lambda x: x.isNotNull()))
+
+
+def _split_tagged(tagged: DataFrame) -> tuple[DataFrame, DataFrame]:
+    valid = tagged.filter(F.size(VIOLATIONS_COL) == 0).drop(VIOLATIONS_COL)
+    invalid = tagged.filter(F.size(VIOLATIONS_COL) > 0)
+    return valid, invalid
+
+
 def split_by_rules(
     df: DataFrame, rules: Mapping[str, Column]
 ) -> tuple[DataFrame, DataFrame]:
@@ -44,19 +62,9 @@ def split_by_rules(
     A row is valid iff EVERY rule evaluates to true; NULL (three-valued
     logic from comparisons against NULL) counts as a violation. The
     invalid side carries ``_violations``: the names of all failed rules.
+    Both sides are lazy: each action on either re-evaluates ``df``.
     """
-    checks = F.array(
-        *[
-            F.when(~cond.eqNullSafe(F.lit(True)), F.lit(name))
-            for name, cond in rules.items()
-        ]
-    )
-    tagged = df.withColumn(
-        VIOLATIONS_COL, F.filter(checks, lambda x: x.isNotNull())
-    )
-    valid = tagged.filter(F.size(VIOLATIONS_COL) == 0).drop(VIOLATIONS_COL)
-    invalid = tagged.filter(F.size(VIOLATIONS_COL) > 0)
-    return valid, invalid
+    return _split_tagged(_tag_violations(df, rules))
 
 
 def quarantine_invalid(
@@ -65,9 +73,13 @@ def quarantine_invalid(
     """Divert rule-violating rows to ``quarantine_path`` (parquet append,
     with the ``_violations`` audit column) and return (valid_df,
     n_quarantined). The job continues with the valid rows — the engine's
-    analog of the reference's skip-bad-batch-and-continue (S:231-236)."""
-    valid, invalid = split_by_rules(df, rules)
-    invalid = invalid.localCheckpoint(eager=True)  # split scans the input once
+    analog of the reference's skip-bad-batch-and-continue (S:231-236).
+
+    The tagged batch is materialized once and both sides are split from
+    it, so ``df``'s plan runs once, however often the valid side is
+    read afterwards."""
+    tagged = _tag_violations(df, rules).localCheckpoint(eager=True)
+    valid, invalid = _split_tagged(tagged)
     n_bad = invalid.count()
     if n_bad:
         invalid.write.mode("append").parquet(quarantine_path)

@@ -140,3 +140,29 @@ def test_shipped_job_quarantines_poisoned_fixture(spark, sf_dir, tmp_path):
     loaded = spark.read.parquet(f"{sink_dir}/view_adicionais")
     assert loaded.filter(F.col("id_manifesto").isNull()).count() == 0
     assert jobs["alimentacao_view_adicionais"](spark) == 0
+
+
+def test_sink_quarantine_runs_the_input_once(spark, tmp_path):
+    """The quarantine split and the sink's load read one materialized
+    batch, so the input's plan runs once, not once per side."""
+    produced = spark.sparkContext.accumulator(0)
+
+    def source(batches):
+        for pdf in batches:
+            produced.add(len(pdf))
+            yield pdf
+
+    df = (
+        spark.range(100)
+        .select(
+            F.when(F.col("id") % 10 != 0, F.col("id").cast("int")).alias("k"),
+            F.col("id").cast("double").alias("amount"),
+        )
+        .mapInPandas(source, "k int, amount double")
+    )
+    n = write_ignore_conflicts(
+        df, str(tmp_path / "sink"), keys=["k"], bad_records_path=str(tmp_path / "bad")
+    )
+    assert n == 90
+    assert spark.read.parquet(str(tmp_path / "bad")).count() == 10
+    assert produced.value == 100

@@ -507,3 +507,55 @@ def test_conflict_check_runs_before_the_dedup(spark, target, monkeypatch):
     assert "LeftAnti" in final and "Window" in final, final
     assert _is_below(final, "Window", "LeftAnti"), final
     assert not _is_below(final, "LeftAnti", "Window"), final
+
+
+def _parquet_under(path):
+    return {f for f in _files_under(path) if f.endswith(".parquet")}
+
+
+# ---------------------------------------------------------------------------
+# Append layout: the sink rebalances the rows it appends, so a small batch
+# lands as one file per partition value, however the batch was spread.
+# The batches below are hash-partitioned on the key into 8 partitions,
+# which already satisfies the dedup window's distribution, so without the
+# rebalance each input partition would write its own file.
+
+
+def _spread(df):
+    return df.repartition(8, "k")
+
+
+def test_small_append_adds_one_file(spark, target):
+    def batch(lo, hi):
+        return _spread(
+            spark.createDataFrame([(k, f"v{k}") for k in range(lo, hi)], "k int, v string")
+        )
+
+    ensure_table(spark, target, batch(0, 0))  # its empty file is not an append
+    # a fresh sink, then an append through the anti-join
+    for lo, hi, appended in ((0, 100, 100), (50, 250, 150)):
+        before = _parquet_under(target)
+        assert write_ignore_conflicts(batch(lo, hi), target, keys=["k"]) == appended
+        assert len(_parquet_under(target) - before) == 1
+    assert spark.read.parquet(target).count() == 250
+
+
+def test_partitioned_append_adds_one_file_per_value(spark, target):
+    def batch(lo, hi):
+        return _spread(
+            spark.createDataFrame(
+                [(f"d{k % 3}", k, f"v{k}") for k in range(lo, hi)],
+                "dt string, k int, v string",
+            )
+        )
+
+    for lo, hi, appended in ((0, 150, 150), (100, 400, 250)):
+        before = _parquet_under(target)
+        n = write_ignore_conflicts(
+            batch(lo, hi), target, keys=["dt", "k"], partition_cols=["dt"]
+        )
+        assert n == appended
+        added = sorted(os.path.basename(os.path.dirname(f))
+                       for f in _parquet_under(target) - before)
+        assert added == ["dt=d0", "dt=d1", "dt=d2"]
+    assert spark.read.parquet(target).count() == 400
