@@ -367,11 +367,9 @@ def main() -> None:
     queries = dict(entry_mod.queries())
 
     # Bench-only composites (curation, seq_packing, quantized/LSH top-k,
-    # the *_fast hash-family pair, flagship_bucketed) come from ONE
-    # shared module (plans/composites.py) also used by
-    # scale_experiment.py — the two harnesses measure the same queries
-    # by construction, with the registry's plan cache (plans build once
-    # per (session, dataset); curation's persist()/checkpoint
+    # the *_fast hash-family pair, flagship_bucketed) come from
+    # plans/composites.py, with the registry's plan cache (plans build
+    # once per (session, dataset); curation's persist()/checkpoint
     # intermediates stay stable across timed runs).
     from ferramenta_etl_spark.plans.composites import add_bench_composites
 

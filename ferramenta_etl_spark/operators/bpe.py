@@ -195,7 +195,6 @@ def train_bpe(
     word_col: str = "word",
     count_col: str = "cnt",
     driver_max_words: int = DRIVER_MAX_WORDS,
-    batch_pairs: bool = False,
 ) -> list[tuple[str, str]]:
     """Learn up to ``num_merges`` merges from a (word, cnt) relation.
     Ties break lexicographically on the pair, so the result is a pure
@@ -219,32 +218,13 @@ def train_bpe(
       components operator: the DATA-sized pass (corpus -> word table)
       already happened distributed in ``word_freq``; what the guard
       bounds is a METADATA-sized artifact.
-    - DISTRIBUTED BATCHED ROUNDS (``batch_pairs``, the above-guard
-      path): each round runs ONE stats job (pair counts + the triple-
-      count maxima that bound what merging a pair can create) and then
-      accepts a PREFIX of the count-ordered candidates on the driver —
-      only pairs provably unaffected by the batch's earlier merges:
-      for each accepted (a, b), a later (c, d) must satisfy d != a and
-      c != b (merging (a,b) only destroys pairs ENDING at a or
-      STARTING at b), must not mention the new token, and must
-      strictly out-count every pair the earlier merge can CREATE
-      (bounded by max-over-z triple(z,a,b) / triple(a,b,z)); the first
-      rejection ends the batch (a skipped pair's post-merge count is
-      unknowable from stale stats, so nothing after it is provable).
-      The batch is therefore EXACTLY the sequential prefix — verified
-      merge-for-merge against the sequential trainer in pytest.
-      DEFAULT OFF after measurement (scale_experiment --bpe-jobs):
-      BPE chains (each merge's token immediately forms the next-best
-      pair with its neighbors, e.g. (t,h) then (th,e)), capping sound
-      stale-stats batching at ~1.6 merges/round on the fixture, while
-      the triple-stats action costs ~8.5 jobs/round under AQE vs the
-      sequential round's ~3 — 552 jobs and 28.9 s where sequential
-      takes 317 and 18.2 s. Kept because the prefix-acceptance rule is
-      the correct building block wherever the corpus' pair graph is
-      wide (e.g. ideographic scripts with flat pair distributions),
-      and because the measurement itself is the documentation; the
-      hybrid path is what actually removes the per-merge job cost
-      (3 jobs vs 317, SCALING.md round-10 probe).
+    - DISTRIBUTED SEQUENTIAL ROUNDS (above the guard): one top-1 pair
+      job and one merge-fold checkpoint per merge. Batching several
+      provably independent merges per round was measured slower on the
+      fixture (552 jobs and 28.9 s against 317 jobs and 18.2 s, SCALING.md
+      round-10 probe): BPE merges chain, since each new token at once
+      forms the next-best pair with its neighbours, so few merges fit a
+      round while its stats job costs more.
     """
     if num_merges < 0:
         raise ValueError(f"num_merges must be >= 0, got {num_merges}")
@@ -278,152 +258,40 @@ def train_bpe(
     # blocks are RDD storage; same GC reliance as dedup.py's iterative
     # connected-components loop). `cur = nxt` drops the only reference
     # each round, so at most a couple of snapshots coexist.
-    if not batch_pairs:
-        while len(merges) < num_merges:
-            best = _top_pairs(cur, 1)
-            if not best or best[0][2] < min_pair_count:
-                break
-            a, b = best[0][0], best[0][1]
-            merges.append((a, b))
-            cur = cur.select(
-                _merge_fold(F.col("syms"), a, b).alias("syms"), "cnt"
-            ).localCheckpoint(eager=True)
-        return merges
-
-    # vocabulary (all symbol strings in play) for the token-collision
-    # stop: chars once + the sentinel + every accepted token
-    vocab = {
-        r.s
-        for r in cur.select(
-            F.explode(F.array_distinct(F.col("syms"))).alias("s")
-        )
-        .distinct()
-        .collect()
-    }
     while len(merges) < num_merges:
-        cands = _top_pairs_with_bounds(cur, 256)
-        if not cands or cands[0][2] < min_pair_count:
+        best = _top_pair(cur)
+        if best is None or best[2] < min_pair_count:
             break
-        accepted = _accept_prefix(
-            cands, vocab, num_merges - len(merges), min_pair_count
-        )
-        if not accepted:
-            break
-        expr = F.col("syms")
-        for a, b in accepted:
-            expr = _merge_fold(expr, a, b)
-            vocab.add(a + b)
-        merges.extend(accepted)
-        cur = cur.select(expr.alias("syms"), "cnt").localCheckpoint(
-            eager=True
-        )
+        a, b, _ = best
+        merges.append((a, b))
+        cur = cur.select(
+            _merge_fold(F.col("syms"), a, b).alias("syms"), "cnt"
+        ).localCheckpoint(eager=True)
     return merges
 
 
-def _pairs_rel(cur: DataFrame) -> DataFrame:
+def _top_pair(cur: DataFrame) -> tuple[str, str, int] | None:
+    """The top pair by (count desc, pair asc) — TakeOrderedAndProject,
+    one row to the driver; None when no word has two symbols left."""
     m = F.size(F.col("syms")) - F.lit(1)
-    return cur.select(
-        F.explode(
-            F.zip_with(
-                F.slice(F.col("syms"), 1, m),
-                F.slice(F.col("syms"), 2, m),
-                lambda x, y: F.struct(x.alias("a"), y.alias("b")),
-            )
-        ).alias("p"),
-        "cnt",
-    )
-
-
-def _top_pairs(cur: DataFrame, k: int) -> list[tuple[str, str, int]]:
-    """Top-k pairs by (count desc, pair asc) — TakeOrderedAndProject,
-    k rows to the driver."""
     rows = (
-        _pairs_rel(cur)
+        cur.select(
+            F.explode(
+                F.zip_with(
+                    F.slice(F.col("syms"), 1, m),
+                    F.slice(F.col("syms"), 2, m),
+                    lambda x, y: F.struct(x.alias("a"), y.alias("b")),
+                )
+            ).alias("p"),
+            "cnt",
+        )
         .groupBy("p.a", "p.b")
         .agg(F.sum("cnt").alias("c"))
         .orderBy(F.col("c").desc(), F.col("a").asc(), F.col("b").asc())
-        .limit(k)
+        .limit(1)
         .collect()
     )
-    return [(r.a, r.b, r.c) for r in rows]
-
-
-def _top_pairs_with_bounds(
-    cur: DataFrame, k: int
-) -> list[tuple[str, str, int, int]]:
-    """One stats job per batched round: the top-k pairs annotated with
-    an upper bound on any pair a merge of them can CREATE. Merging
-    (a, b) -> ab creates pairs (z, ab) and (ab, z); each instance needs
-    an adjacent triple (z, a, b) / (a, b, z) in the CURRENT table, so
-    max-over-z of those triple counts bounds every child pair. Pair and
-    triple aggregates share the single scan of the checkpointed word
-    table; k+0 rows come back."""
-    m3 = F.size(F.col("syms")) - F.lit(2)
-    triples = cur.filter(F.size(F.col("syms")) >= 3).select(
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), m3),
-                lambda i: F.struct(
-                    F.element_at(F.col("syms"), i).alias("a"),
-                    F.element_at(F.col("syms"), i + 1).alias("b"),
-                    F.element_at(F.col("syms"), i + 2).alias("c"),
-                ),
-            )
-        ).alias("t"),
-        "cnt",
-    )
-    tc = triples.groupBy("t.a", "t.b", "t.c").agg(F.sum("cnt").alias("c3"))
-    left_max = tc.groupBy(
-        F.col("b").alias("a"), F.col("c").alias("b")
-    ).agg(F.max("c3").alias("lmax"))
-    right_max = tc.groupBy("a", "b").agg(F.max("c3").alias("rmax"))
-    pc = _pairs_rel(cur).groupBy("p.a", "p.b").agg(F.sum("cnt").alias("c"))
-    rows = (
-        pc.join(left_max, ["a", "b"], "left")
-        .join(right_max, ["a", "b"], "left")
-        .orderBy(F.col("c").desc(), F.col("a").asc(), F.col("b").asc())
-        .limit(k)
-        .collect()
-    )
-    return [
-        (r.a, r.b, r.c, max(r.lmax or 0, r.rmax or 0)) for r in rows
-    ]
-
-
-def _accept_prefix(
-    cands: list[tuple[str, str, int, int]],
-    vocab: set,
-    budget: int,
-    min_pair_count: int,
-) -> list[tuple[str, str]]:
-    """The provably-sequential prefix of a count-ordered candidate list
-    (see train_bpe docstring for the soundness argument). ``vocab``
-    triggers the token-collision stop: a new token string that already
-    exists as a symbol would MERGE its pair counts with the existing
-    symbol's, invalidating every later stale count."""
-    accepted: list[tuple[str, str]] = []
-    bounds: list[int] = []  # new-pair bound per accepted merge
-    for a, b, cnt, nmax in cands:
-        if len(accepted) >= budget or cnt < min_pair_count:
-            break
-        ok = True
-        for (pa, pb), pbound in zip(accepted, bounds):
-            if (
-                b == pa
-                or a == pb
-                or (a, b) == (pa, pb)
-                or (pa + pb) in (a, b)
-                or cnt <= pbound
-            ):
-                ok = False
-                break
-        if not ok:
-            break  # prefix rule: nothing after a rejection is provable
-        accepted.append((a, b))
-        bounds.append(nmax)
-        if (a + b) in vocab:
-            break  # sound to accept, unsound to continue past
-    return accepted
+    return (rows[0].a, rows[0].b, rows[0].c) if rows else None
 
 
 def train_bpe_from_docs(

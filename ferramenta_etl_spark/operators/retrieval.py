@@ -732,26 +732,17 @@ def bm25_topk_on_index(
     b: float = 0.75,
     query_id_col: str = "query_id",
     query_col: str = "query",
-    prune: bool = True,
 ) -> DataFrame:
     """Serve from a persisted index: derive idf for the QUERY's terms
     from the committed df relation (both sides bucket-pruned), then one
-    broadcast join against the (pruned) postings. ``prune=False`` is
-    the measurement arm scale_experiment uses — identical results over
-    a full postings scan."""
+    broadcast join against the pruned postings."""
     qt = _query_terms(queries, query_id_col, query_col)
-    postings, df_rel = disk.postings, disk.df
-    if prune:
-        buckets = [
-            r.b
-            for r in qt.select(
-                _BUCKET(disk.n_buckets).alias("b")
-            )
-            .distinct()
-            .collect()
-        ]
-        postings = postings.filter(F.col("term_bucket").isin(buckets))
-        df_rel = df_rel.filter(F.col("term_bucket").isin(buckets))
+    buckets = [
+        r.b
+        for r in qt.select(_BUCKET(disk.n_buckets).alias("b")).distinct().collect()
+    ]
+    postings = disk.postings.filter(F.col("term_bucket").isin(buckets))
+    df_rel = disk.df.filter(F.col("term_bucket").isin(buckets))
     # qt is small by contract -> broadcast against df to pull idf for
     # exactly the query terms; the result stays query-sized and
     # broadcasts again against the postings

@@ -75,7 +75,7 @@ def plan_cache(fn):
             # one live (session, dataset) at a time: no growth — and
             # evicted plans must RELEASE their persisted dependencies
             # (the curation/_persisted_deps convention), else a dataset
-            # switch in one session (scale_experiment base -> scaled)
+            # switch in one session (a base then a scaled fixture)
             # drops the only Python reference while the cached data
             # stays pinned in executor storage
             for old in cache.values():

@@ -1,8 +1,6 @@
-"""Bench-only composite queries, shared by bench.py and
-scale_experiment.py so the two harnesses can never drift apart (same
-names, same parameters, same plan-cache policy — a parameter change
-lands once and both the sf0.1 headline numbers and the 100x ratios
-keep measuring the same query).
+"""Bench-only composite queries for bench.py's headline set (names,
+parameters and the plan-cache policy live here, beside the registry
+they extend).
 
 These ride alongside the 50-query oracle registry rather than in it:
 curation/seq_packing are end-to-end compositions whose stages are
@@ -26,11 +24,10 @@ def _skewed_fact_dim(spark: SparkSession, sf: str, replicate: int):
     replicated ``replicate``x with 90% of rows funneled onto key 0
     (the null/default-key pathology) against a 5k-row dim whose
     broadcast is disabled via a SHUFFLE_HASH hint — modeling the
-    big-dim case where broadcasting is not an option. bench.py
-    (replicate=20, a 12M-row fact with ~11M rows on the hot key) and
-    scale_experiment.py --skew share this one plan. Hot fraction
-    history: rounds 3-6 used 33%, where AQE's skew-join split closes
-    the local-mode gap to within run noise (measured round 7: 1.06x
+    big-dim case where broadcasting is not an option. bench.py runs it
+    at replicate=20, a 12M-row fact with ~11M rows on the hot key. Hot
+    fraction history: rounds 3-6 used 33%, where AQE's skew-join split
+    closes the local-mode gap to within run noise (measured round 7: 1.06x
     at replicate=10 — the salted-vs-plain sign flipped between
     healthy bench runs); at 90% hot and replicate=20 the hot
     partition dominates the job and the arms separate decisively

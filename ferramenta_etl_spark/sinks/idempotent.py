@@ -436,10 +436,18 @@ def write_ignore_conflicts(
     Returns the number of rows appended. Re-running with the same input
     appends 0.
     """
+    # argument checks come first: quarantine writes, so a call that is
+    # going to be refused must not leave quarantined rows behind
     if rules is not None and bad_records_path is None:
         raise ValueError(
             "rules require bad_records_path — refusing to drop rows "
             "without a quarantine destination"
+        )
+    if partition_cols and not set(partition_cols) <= set(keys):
+        raise ValueError(
+            f"partition_cols {list(partition_cols)} must be a subset of keys "
+            f"{list(keys)} — otherwise a conflict hiding in an untouched "
+            "partition would escape the pruned anti-join"
         )
     if bad_records_path is not None:
         from .quarantine import quarantine_invalid
@@ -449,12 +457,6 @@ def write_ignore_conflicts(
             all_rules.update(rules)
         df, _ = quarantine_invalid(df, all_rules, bad_records_path)
     spark = df.sparkSession
-    if partition_cols and not set(partition_cols) <= set(keys):
-        raise ValueError(
-            f"partition_cols {list(partition_cols)} must be a subset of keys "
-            f"{list(keys)} — otherwise a conflict hiding in an untouched "
-            "partition would escape the pruned anti-join"
-        )
     with _sink_lock(spark, path, timeout_s=lock_timeout_s, stale_s=lock_stale_s):
         return _write_parquet_locked(spark, df, path, keys, partition_cols, order_by)
 
@@ -507,8 +509,11 @@ def _write_parquet_locked(
                 f"sink {path}: existing columns {existing.columns} != incoming {df.columns}"
             )
         if partition_cols:
-            # the undeduped batch touches the same partition tuples as
-            # its dedup: partition columns are key columns
+            # the touched-tuple collect and the anti-join both read the
+            # batch, so materialize it once: its plan runs once, not twice.
+            # The undeduped batch touches the same partition tuples as its
+            # dedup: partition columns are key columns.
+            df = df.localCheckpoint(eager=True)
             existing = existing.filter(_touched_partition_filter(df, partition_cols))
         existing_keys = existing.select(*keys)
         fresh = anti_join_keys(df, existing_keys, list(keys))

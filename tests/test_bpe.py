@@ -215,56 +215,15 @@ def test_local_trainer_matches_reference_random():
 
 
 def test_distributed_paths_match_reference(spark, corpus):
-    """Above the driver guard (forced with driver_max_words=0) both the
-    sequential and the BATCHED-ROUND distributed trainers must produce
-    the reference merge list — the batched rounds accept only the
-    provably-sequential prefix (VERDICT r09 #4), so the list is
-    identical merge-for-merge, not merely equivalent."""
+    """Above the driver guard (forced with driver_max_words=0) the
+    distributed sequential trainer must produce the reference merge
+    list, merge for merge."""
     from ferramenta_etl_spark.operators.bpe import train_bpe, word_freq
 
     df = spark.createDataFrame([(t,) for t in corpus], "text string")
     wc = Counter(w for t in corpus for w in t.lower().split(" ") if w)
-    wf = word_freq(df)
     want = py_train_bpe(wc, 24)
-    got_batched = train_bpe(wf, 24, driver_max_words=0, batch_pairs=True)
-    assert got_batched == want
-    got_seq = train_bpe(wf, 24, driver_max_words=0, batch_pairs=False)
-    assert got_seq == want
-
-
-def test_batched_rounds_exhaust_and_batch(spark):
-    """On a fixture engineered with several independent high-count pairs
-    the batched trainer must (a) still match the reference exactly and
-    (b) actually accept >1 merge in some round — i.e. the batching is
-    exercised, not vacuously sequential."""
-    from ferramenta_etl_spark.operators.bpe import train_bpe
-
-    # (a,b) count 100 but split across two contexts, so the largest pair
-    # a merge of it can CREATE is 50; (g,h) at 60 strictly beats that
-    # bound and shares no symbol — provably the sequential #2, so round
-    # 1 must accept both. (Short words can't batch at all: every word
-    # ends in </w>, so merging a short word's pair immediately creates a
-    # (token,</w>) pair at the full count — chaining by construction.)
-    from unittest import mock
-
-    from ferramenta_etl_spark.operators import bpe as bpe_mod
-
-    wc = {"cabe": 50, "dabf": 50, "ghi": 30, "ghj": 30}
-    df = spark.createDataFrame(list(wc.items()), "word string, cnt long")
-    want = py_train_bpe(wc, 10, min_pair_count=1)
-    with mock.patch.object(
-        bpe_mod,
-        "_top_pairs_with_bounds",
-        side_effect=bpe_mod._top_pairs_with_bounds,
-    ) as spy:
-        got = train_bpe(
-            df, 10, min_pair_count=1, driver_max_words=0, batch_pairs=True
-        )
-    assert got == want
-    assert got[:2] == [("a", "b"), ("g", "h")]
-    # batching exercised for real: strictly fewer stats rounds than
-    # merges (round 1 must take (a,b) and (g,h) together)
-    assert spy.call_count < len(got)
+    assert train_bpe(word_freq(df), 24, driver_max_words=0) == want
 
 
 def test_duckdb_replace_chain_equals_greedy_encoder():

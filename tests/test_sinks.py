@@ -155,6 +155,49 @@ def test_partition_cols_must_be_keys(spark, target):
         write_ignore_conflicts(df, target, keys=["k"], partition_cols=["dt"])
 
 
+def test_bad_partition_cols_refused_before_quarantine(spark, tmp_path):
+    """A call refused for its partition_cols quarantines nothing: a
+    retry after fixing the call would otherwise quarantine the same
+    rows a second time, for a load that never happened."""
+    df = spark.createDataFrame([(None, "2024-01-01", "a")], "k int, dt string, v string")
+    bad = tmp_path / "bad"
+    with pytest.raises(ValueError, match="subset of keys"):
+        write_ignore_conflicts(
+            df,
+            str(tmp_path / "sink"),
+            keys=["k"],
+            partition_cols=["dt"],
+            bad_records_path=str(bad),
+        )
+    assert not bad.exists()
+
+
+def test_partitioned_rerun_runs_the_batch_once(spark, target):
+    """A partitioned sink that holds data reads the batch twice, for
+    the touched partitions and for the anti-join; both read one
+    materialized copy, so the batch's plan runs once."""
+    produced = spark.sparkContext.accumulator(0)
+
+    def source(batches):
+        for pdf in batches:
+            produced.add(len(pdf))
+            yield pdf
+
+    df = (
+        spark.range(100)
+        .select(
+            F.col("id").cast("int").alias("k"),
+            (F.col("id") % 4).cast("int").alias("p"),
+        )
+        .mapInPandas(source, "k int, p int")
+    )
+    kw = dict(keys=["k", "p"], partition_cols=["p"])
+    assert write_ignore_conflicts(df, target, **kw) == 100
+    before = produced.value
+    assert write_ignore_conflicts(df, target, **kw) == 0
+    assert produced.value - before == 100
+
+
 def test_partitioned_sink_survives_empty_first_write(spark, tmp_path):
     """A partitioned first load with ZERO rows writes no part files
     (nothing to partition) — the sink directory must not poison later
@@ -371,6 +414,7 @@ def test_heartbeat_keeps_slow_holder_alive(spark, target):
 # ---------------------------------------------------------------------------
 
 _ROW = "k1 int, k2 string, o int, v string"
+_COLS = ["k1", "k2", "o", "v"]
 _KEYS = ["k1", "k2"]
 _row = st.tuples(
     st.one_of(st.none(), st.integers(0, 3)),
@@ -415,40 +459,47 @@ def _files_under(path):
     return {os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs}
 
 
-@given(case=_held_and_offered())
-@example(case=([(1, "a", 0, "x")], []))  # empty batch
+_NULL_KEYS_CASE = (
+    [(None, None, 1, "x"), (2, "a", 0, None)],
+    [
+        (None, None, 0, "y"), (None, None, None, "z"), (2, None, 1, "x"),
+        (2, None, 0, "y"), (2, "a", None, "z"), (3, "b", None, None),
+        (3, "b", None, "x"),
+    ],
+)
+
+
+@given(case=_held_and_offered(), partition_cols=st.sampled_from([[], ["k1"]]))
+@example(case=([(1, "a", 0, "x")], []), partition_cols=[])  # empty batch
 @example(  # every offered key held, with in-batch duplicates
     case=(
         [(1, "a", 0, "x"), (None, "b", 1, "y")],
         [(1, "a", 2, "z"), (1, "a", None, "y"), (None, "b", 0, "x")],
-    )
+    ),
+    partition_cols=[],
 )
-@example(  # NULL key parts; duplicates of held and of new keys
-    case=(
-        [(None, None, 1, "x"), (2, "a", 0, None)],
-        [
-            (None, None, 0, "y"), (None, None, None, "z"), (2, None, 1, "x"),
-            (2, None, 0, "y"), (2, "a", None, "z"), (3, "b", None, None),
-            (3, "b", None, "x"),
-        ],
-    )
-)
+# NULL key parts; duplicates of held and of new keys; partitioned on the
+# nullable k1, so a NULL partition value is held and offered
+@example(case=_NULL_KEYS_CASE, partition_cols=[])
+@example(case=_NULL_KEYS_CASE, partition_cols=["k1"])
 @settings(
     max_examples=6,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
-def test_matches_on_conflict_do_nothing_model(spark, tmp_path, case):
+def test_matches_on_conflict_do_nothing_model(spark, tmp_path, case, partition_cols):
     """The sink's whole row set after writing a held batch and then an
     offered batch equals the pure-Python ON CONFLICT DO NOTHING model,
-    and so does the returned count; a batch that appends nothing adds
-    no file."""
+    and so does the returned count, plain or partitioned; a batch that
+    appends nothing adds no file."""
     held, offered = case
     path = str(tmp_path / uuid.uuid4().hex)
 
     def write(rows):
         df = spark.createDataFrame(rows, _ROW)
-        return write_ignore_conflicts(df, path, keys=_KEYS, order_by=["o"])
+        return write_ignore_conflicts(
+            df, path, keys=_KEYS, order_by=["o"], partition_cols=partition_cols
+        )
 
     model = _on_conflict_do_nothing({}, held)
     assert write(held) == len(model)
@@ -457,7 +508,7 @@ def test_matches_on_conflict_do_nothing_model(spark, tmp_path, case):
     before = _files_under(path)
     assert write(offered) == len(new)
     expected = sorted(model + new, key=lambda r: tuple(map(_asc, r)))
-    got = [tuple(r) for r in spark.read.parquet(path).collect()]
+    got = [tuple(r) for r in spark.read.parquet(path).select(*_COLS).collect()]
     assert sorted(got, key=lambda r: tuple(map(_asc, r))) == expected
     if not new:
         assert _files_under(path) == before
